@@ -8,19 +8,26 @@ and is broadcast each pass. The soft assignment R is NEVER materialized
 ``self._r_state`` and recomputed inside whichever kernel needs it. The
 N-sized data never moves to the driver and never shuffles.
 
-Per harmony round (reference lifecycle R/utils.R:15-46):
-  cold-start pass (src/harmony.cpp:214-228) — the ONE row-writing job:
-    apply previous correction, normalize -> zn, fused O/E/objective
-    partials (tag rows);
-  x max_iter_cluster E-steps (:318-323) — aggregation-only jobs:
-    * ``estep_mode="batch"``: one job, full-batch fixed point;
-    * ``estep_mode="blocked"``: the reference's online update (C3),
-      one job per block — driver subtracts the block's cached O/E
-      contribution, the job reassigns it against the decremented
-      penalty, the new contribution is added back;
-  moe partials pass (:561-609)  -> per-combo Gram/RHS sums;
-  driver: C5 support filter (:350-402), λ auto (M8), K ridge solves
-  (M6), centroid update (M3)    -> W_all for the next round.
+Per harmony round (reference lifecycle R/utils.R:15-46), one of two
+strategies that share every float-producing helper (``run`` picks one
+by partition count; over one partition they are bit-identical):
+  ``_distributed_round`` (several partitions, above FUSE_CELLS cells):
+    cold-start pass (src/harmony.cpp:214-228) — the ONE row-writing job:
+      apply previous correction, normalize -> zn, fused O/E/objective
+      partials (tag rows);
+    x max_iter_cluster E-steps (:318-323) — aggregation-only jobs:
+      * ``estep_mode="batch"``: one job, full-batch fixed point;
+      * ``estep_mode="blocked"``: the reference's online update (C3),
+        one job per block — driver subtracts the block's cached O/E
+        contribution, the job reassigns it against the decremented
+        penalty, the new contribution is added back;
+    moe partials pass (:561-609)  -> per-combo Gram/RHS sums.
+  ``_fused_round`` (single partition): the cold start, the whole E-step
+    loop and the MoE partials as ONE Arrow pass, which emits the cell
+    rows plus one state row holding the round's final O, E, objectives,
+    assignment state and combo sums.
+Then on the driver: C5 support filter (:350-402), λ auto (M8), K ridge
+solves (M6), centroid update (M3) -> W_all for the next round.
 Convergence: window-3 cluster check + harmony check (:173-205), driver
 floats. Both E-step modes are pinned to the NumPy cross-oracle
 (numpy_ref.py) by allclose tests; ``run_harmony(mode="blocked-local")``
@@ -30,7 +37,7 @@ single-node-sized data.
 
 from __future__ import annotations
 
-import os
+import pickle
 import sys
 
 import numpy as np
@@ -45,6 +52,7 @@ from harmony_spark.core.params import HarmonyOptions, ResolvedParams, resolve_pa
 from harmony_spark.core.scalars import SCALAR as F32, SPARK_SCALAR  # noqa: E402
 
 _INIT_SAMPLE_CAP = 30_000  # driver-side kmeans sample (init only)
+FUSE_CELLS = 65_536  # at or below this many cells, one partition: one pass per round
 
 
 class HarmonySpark:
@@ -149,24 +157,22 @@ class HarmonySpark:
             ],
         )
         # partition sizing: ~10k cells per task (matches the Arrow batch
-        # size) so the ~12 jobs/round schedule O(N/10k) tasks, not
+        # size) so each distributed round's jobs (cold start, one per
+        # E-step or block, MoE partials) schedule O(N/10k) tasks, not
         # O(shuffle.partitions) tiny ones; at 1e9 cells this is 100k
         # tasks/pass on a cluster, at N=500 it is one.
         target_parts = max(1, min(self.spark.sparkContext.defaultParallelism, -(-N // 10_000)))
-        # below the fuse cap, collapse to ONE partition: the whole kmeans
-        # loop (and the MoE partials) then runs as a single Arrow pass
-        # per round (_kmeans_loop fused path) instead of one job per
-        # iteration — at 32k cells the per-job scheduler floor costs far
-        # more than the lost map parallelism (a 64k-cell task is a few
-        # tens of MB / tens of ms of vectorized numpy, guide §2.2: fewer,
-        # larger partitions; §4: collapse tiny mapInPandas round-trips).
-        # Above the cap the distributed per-iteration path is unchanged —
-        # at 1e9 cells this branch never fires.
-        if N <= int(os.environ.get("HARMONY_FUSE_CELLS", "65536")):
+        # at or below FUSE_CELLS, collapse to ONE partition: run() then
+        # takes _fused_round, one Arrow pass per round, instead of
+        # _distributed_round's one job per iteration — at 32k cells the
+        # per-job scheduler floor costs far more than the lost map
+        # parallelism (a 64k-cell task is a few tens of MB / tens of ms
+        # of vectorized numpy, guide §2.2: fewer, larger partitions; §4:
+        # collapse tiny mapInPandas round-trips). At 1e9 cells this
+        # branch never fires. repartition/mapInPandas/localCheckpoint
+        # all preserve the partition count across rounds.
+        if N <= FUSE_CELLS:
             target_parts = 1
-        # single-partition inputs qualify for the fused kmeans-loop pass
-        # (_kmeans_loop); repartition/mapInPandas/localCheckpoint all
-        # preserve the partition count across rounds
         self._cells_nparts = target_parts
         cells = cells.repartition(target_parts)
         # LAZY persist: every first consumer (the init sample collect /
@@ -207,45 +213,28 @@ class HarmonySpark:
     def _broadcast(self, **arrays):
         return self.spark.sparkContext.broadcast(arrays)
 
-    def _swap_persist(self, df: DataFrame, materialize: bool = True) -> DataFrame:
-        """Persist ``df`` and retire the previous round's cache.
-        ``materialize=False`` skips the eager count when the CALLER's
-        next action already touches every partition (a filtered collect
-        still scans all partitions, so the cache fills as a by-product
-        — one mapInPandas job instead of two per cold start)."""
+    def _swap_persist(self, df: DataFrame) -> DataFrame:
+        """Persist a round's row-writing pass as the round cache.  No
+        eager count: the caller's next action (the filtered collect of
+        the pass's non-cell rows) scans every partition, so the cache
+        fills as a by-product."""
+        # Deferred fill is only safe from a cold start: if _persisted
+        # held an ancestor of df, retiring it before the filling action
+        # would force that action to recompute the whole lineage.
+        assert self._persisted is None, (
+            "_swap_persist requires a cold start (_persisted must be None)"
+        )
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if materialize:
-            df.count()
-        else:
-            # Deferred fill is only safe from a cold start: if
-            # _persisted held an ancestor of df, unpersisting it here
-            # would force the caller's filling action to recompute the
-            # whole lineage from scratch.
-            assert self._persisted is None, (
-                "_swap_persist(materialize=False) requires a cold start "
-                "(_persisted must be None)"
-            )
-        if self._persisted is not None:
-            self._persisted.unpersist()
         self._persisted = df
         return df
 
-    @property
-    def _pass_schema(self) -> str:
+    def _pass_schema(self, extra: str) -> str:
+        """Schema of a row-writing pass: the cell columns, then the
+        ``extra`` columns its non-cell rows (NULL cell_id) carry."""
         codes = ", ".join(f"{c} int" for c in self.code_cols)
         return (
             f"cell_id long, z_orig array<{SPARK_SCALAR}>, {codes}, "
-            f"zn array<{SPARK_SCALAR}>, "
-            "blk int, o array<double>, rlogr array<double>, rdist double"
-        )
-
-    @property
-    def _round_schema(self) -> str:
-        # the fused-round pass additionally tags rows with the loop
-        # iteration and carries the MoE combo partials
-        return (
-            self._pass_schema
-            + ", it int, combo array<long>, s array<double>, m array<double>"
+            f"zn array<{SPARK_SCALAR}>, {extra}"
         )
 
     # ------------------------------------------------------------ passes
@@ -270,13 +259,10 @@ class HarmonySpark:
         kernel = kernels.make_cold_start_kernel(
             bc, self.code_cols, self.p.offsets, self.p.K, self.p.B
         )
-        # materialize=False: the partials collect below filters AFTER the
-        # cache layer, so its one job both fills the round's cache and
-        # returns the O/E partials — the separate count() job the old
-        # path paid per cold start is gone.
+        # the partials collect filters AFTER the cache layer, so its one
+        # job both fills the round's cache and returns the O/E partials
         full = self._swap_persist(
-            source.mapInPandas(kernel, schema=self._pass_schema),
-            materialize=False,
+            source.mapInPandas(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
         )
         parts = (
             full.where(F.col("cell_id").isNull())
@@ -322,9 +308,9 @@ class HarmonySpark:
             return
 
         # blocked online mode — the Gauss-Seidel state chain itself lives
-        # in kernels.blocked_estep_chain (shared with the fused
-        # single-partition kernel); this path supplies per-block partials
-        # via one Spark job per block
+        # in kernels.blocked_estep_chain (shared with the fused round
+        # kernel); this path supplies per-block partials via one Spark
+        # job per block
         p = self.p
         nb = self.n_blocks
         block_expr = F.pmod(
@@ -344,38 +330,15 @@ class HarmonySpark:
                 .mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA)
                 .collect()
             )
-            C_new = np.zeros((p.K, p.B), dtype=np.float64)
-            rl = np.zeros(p.K, dtype=np.float64)
-            rd = 0.0
-            for row in parts:
-                C_new += np.asarray(row["o"]).reshape(p.K, p.B)
-                rl += np.asarray(row["rlogr"])
-                rd += row["rdist"]
+            (C_new,), rl, rd = kernels.sum_partials(parts, p.K, p.B, 1)
             return C_new, rl, rd
 
-        self._estep_apply_blocked(round_idx, run_block)
-
-    def _estep_apply_blocked(self, round_idx: int, run_block) -> None:
-        """Blocked-mode driver bookkeeping around one E-step: run the
-        shared state chain with ``run_block`` as the partials source,
-        commit O/E/_r_state and push the objective.  Used by both the
-        per-block-job path and the fused-chain replay."""
-        p = self.p
-        nb = self.n_blocks
         O, states, rlogr_tot, rdist_tot = kernels.blocked_estep_chain(
-            self.O,
-            self._block_contrib,
-            self.Y,
-            p.sigma,
-            p.theta,
-            p.Pr_b,
-            p.B_vec[0],
-            nb,
-            run_block,
+            self.O, self._block_contrib, self.Y, p.sigma, p.theta,
+            p.Pr_b, p.B_vec[0], nb, run_block,
         )
         self.O = O.astype(F32)
-        mass = O[:, : p.B_vec[0]].sum(axis=1)
-        self.E = (mass[:, None] * p.Pr_b[None, :].astype(np.float64)).astype(F32)
+        self.E = kernels.expected_E(O, p.Pr_b, p.B_vec[0]).astype(F32)
         self._r_state = {
             "blocked": True,
             "states": states,
@@ -389,68 +352,38 @@ class HarmonySpark:
         )
 
     def _kmeans_loop(self, cells: DataFrame, round_idx: int) -> int:
-        """One harmony round's kmeans E-step loop (the DISTRIBUTED
-        per-iteration path — single-partition inputs take _fused_round
-        instead); returns the number of iterations run."""
+        """One harmony round's kmeans E-step loop, one job per E-step
+        (per block in blocked mode); returns the number of iterations."""
         p = self.p
         iters = 0
         for it in range(p.max_iter_cluster):
             self._estep_pass(cells, round_idx)
             iters = it + 1
-            if it > p.window_size and self._kmeans_converged():
+            if it > p.window_size and kernels.km_window_converged(
+                self.objective_kmeans, p.window_size, p.epsilon_cluster
+            ):
                 break
         return iters
 
-    def _replay_chain(self, rows, round_idx: int) -> int:
-        """Replay the driver bookkeeping from the fused pass's
-        per-(iteration, block) chain partial rows — bit-identical to the
-        per-iteration jobs' because the chain/objective code is shared
-        (kernels._run_chain / blocked_estep_chain / km_objective).
-        Returns the number of iterations the in-kernel loop ran."""
-        p = self.p
-        blocked = self.estep_mode == "blocked"
-        by_it: dict[int, list] = {}
-        for row in rows:
-            by_it.setdefault(row["it"], []).append(row)
-        iters = 0
-        for it in sorted(by_it):
-            parts = by_it[it]
-            if blocked:
-                by_blk = {row["blk"]: row for row in parts}
-
-                def run_block(i: int, state_i: dict, _b=by_blk):
-                    row = _b[i]
-                    return (
-                        np.asarray(row["o"]).reshape(p.K, p.B),
-                        np.asarray(row["rlogr"]),
-                        row["rdist"],
-                    )
-
-                self._estep_apply_blocked(round_idx, run_block)
-            else:
-                state = {
-                    "Y": self.Y,
-                    "sigma": p.sigma,
-                    "theta": p.theta,
-                    "O": self.O,
-                    "E": self.E,
-                    "penalty": True,
-                }
-                self._r_state = state
-                self._finish_partials(
-                    [
-                        {
-                            "blk": 0,
-                            "o": row["o"],
-                            "rlogr": row["rlogr"],
-                            "rdist": row["rdist"],
-                        }
-                        for row in parts
-                    ],
-                    push_objective=True,
-                )
-            iters = it + 1
-        return iters
+    def _distributed_round(
+        self, source: DataFrame, round_idx: int
+    ) -> tuple[DataFrame, int, dict]:
+        """One harmony round as separate jobs (multi-partition inputs):
+        the cold start pass, the kmeans loop and the MoE partials pass.
+        Returns (cells_with_zn, kmeans_iters, moe_combos)."""
+        cells = self._cold_start_pass(
+            source, with_prev_correction=round_idx > 0,
+            push_objective=round_idx == 0, round_idx=round_idx,
+        )
+        if round_idx == 0:
+            # cells0 (its own z_orig copy) is only a source for init + the
+            # round-0 pass; dropping it now halves the steady-state cache —
+            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
+            # (the cold start's collect filled the round cache, so nothing
+            # recomputes through this lineage.)
+            self.cells0.unpersist()
+        iters = self._kmeans_loop(cells, round_idx)
+        return cells, iters, self._moe_partials(cells)
 
     def _fused_round(
         self, source: DataFrame, round_idx: int
@@ -458,20 +391,18 @@ class HarmonySpark:
         """One WHOLE harmony round as ONE Arrow pass (single-partition
         inputs only, kernels.make_round_kernel): cold-start correction +
         re-assignment, the full kmeans E-step loop, and the MoE combo
-        partials — what the distributed path runs as 3+ jobs (guide §4).
-        Returns (cells_with_zn, kmeans_iters, moe_combos); driver
-        bookkeeping (O/E/objectives/_r_state) is replayed from the
-        tagged partial rows and stays bit-identical to the distributed
-        path's."""
+        partials — what _distributed_round runs as 3+ jobs (guide §4).
+        The pass's one state row carries the round's final O, E,
+        objectives, assignment state and combos; the driver assigns them
+        as-is.  Returns (cells_with_zn, kmeans_iters, moe_combos)."""
         p = self.p
-        blocked = self.estep_mode == "blocked"
-        nb = self.n_blocks if blocked else 1
+        push_objective = round_idx == 0
         state = dict(
             Y=self.Y,
             sigma=p.sigma,
             theta=p.theta,
             mode=self.estep_mode,
-            nb=nb,
+            nb=self.n_blocks if self.estep_mode == "blocked" else 1,
             round_idx=round_idx,
             max_iter=p.max_iter_cluster,
             window=p.window_size,
@@ -479,53 +410,30 @@ class HarmonySpark:
             N=p.N,
             Pr_b=p.Pr_b,
             B0=p.B_vec[0],
-            moe=True,
-        )
-        with_prev = round_idx > 0
-        if with_prev:
-            state["W_all"] = self.W_all
-            state["prev_state"] = self._r_state
-        bc = self.spark.sparkContext.broadcast(state)
-        kernel = kernels.make_round_kernel(
-            bc, self.code_cols, p.offsets, p.K, p.B
+            push_objective=push_objective,
         )
         cols = ["cell_id", "z_orig", *self.code_cols]
-        if with_prev:
+        if round_idx > 0:
+            state["W_all"] = self.W_all
+            state["prev_state"] = self._r_state
             cols.append("zn")
+        kernel = kernels.make_round_kernel(
+            self._broadcast(**state), self.code_cols, p.offsets, p.K, p.B
+        )
         full = self._swap_persist(
-            source.select(*cols).mapInPandas(kernel, schema=self._round_schema),
-            materialize=False,
+            source.select(*cols).mapInPandas(
+                kernel, schema=self._pass_schema("state binary")
+            )
         )
-        parts = (
-            full.where(F.col("cell_id").isNull())
-            .select("it", "blk", "o", "rlogr", "rdist", "combo", "s", "m")
-            .collect()
-        )
-        # cold-start partials -> O/E/_block_contrib (+ the init objective
-        # on round 0, matching the reference's init pass)
-        self._finish_partials(
-            [r for r in parts if r["it"] == kernels.ROUND_IT_COLD],
-            push_objective=(round_idx == 0),
-        )
-        self._r_state = {"Y": self.Y, "sigma": p.sigma, "penalty": False}
-        iters = self._replay_chain(
-            [r for r in parts if r["it"] >= 0], round_idx
-        )
-        combos: dict[tuple, tuple] = {}
-        for row in parts:
-            if row["it"] != kernels.ROUND_IT_MOE:
-                continue
-            c = tuple(row["combo"])
-            S = np.asarray(row["s"])
-            M = np.asarray(row["m"]).reshape(p.K, p.d)
-            if c in combos:
-                combos[c] = (combos[c][0] + S, combos[c][1] + M)
-            else:
-                combos[c] = (S, M)
-        cells = full.where(F.col("cell_id").isNotNull()).select(
-            "cell_id", "z_orig", *self.code_cols, "zn"
-        )
-        return cells, iters, combos
+        (row,) = full.where(F.col("cell_id").isNull()).select("state").collect()
+        if round_idx == 0:
+            self.cells0.unpersist()  # as in _distributed_round
+        out = pickle.loads(row["state"])
+        self.O, self.E, self._r_state = out["O"], out["E"], out["r_state"]
+        self.objective_kmeans += out["objectives"]
+        iters = len(out["objectives"]) - push_objective
+        cells = full.where(F.col("cell_id").isNotNull()).drop("state")
+        return cells, iters, out["combos"]
 
     def _finish_partials(self, parts, push_objective: bool) -> None:
         """Final reduction of the per-partition partials: O, E (A4/A5)
@@ -535,25 +443,11 @@ class HarmonySpark:
         without recording an objective (src/harmony.cpp:214-228)."""
         p = self.p
         nb = self.n_blocks if self.estep_mode == "blocked" else 1
-        per_block = [np.zeros((p.K, p.B), dtype=np.float64) for _ in range(nb)]
-        rlogr = np.zeros(p.K, dtype=np.float64)
-        rdist = 0.0
-        for row in parts:
-            per_block[row["blk"] or 0] += np.asarray(row["o"]).reshape(p.K, p.B)
-            rlogr += np.asarray(row["rlogr"])
-            rdist += row["rdist"]
-        O = np.sum(per_block, axis=0)
-        self._block_contrib = per_block
-        self.O = O.astype(F32)
-        mass = O[:, : p.B_vec[0]].sum(axis=1)  # sum_i R_ki via covariate 0
-        self.E = (mass[:, None] * p.Pr_b[None, :].astype(np.float64)).astype(F32)
-        if not push_objective:
-            return
-        norm_const = 2000.0 / p.N
-        entropy = float((rlogr * p.sigma).sum())
-        log_term = np.log((self.O + self.E + 1.0) / (2.0 * self.E + 1.0))
-        cross = float((p.sigma[:, None] * p.theta[None, :] * log_term * self.O).sum())
-        self.objective_kmeans.append((rdist + entropy + cross) * norm_const)
+        self._block_contrib, self.O, self.E, objective = kernels.finish_partials(
+            parts, nb, p.sigma, p.theta, p.Pr_b, p.B_vec[0], p.N
+        )
+        if push_objective:
+            self.objective_kmeans.append(objective)
 
     def _moe_partials(self, cells: DataFrame) -> dict[tuple, tuple[np.ndarray, np.ndarray]]:
         p = self.p
@@ -752,13 +646,6 @@ class HarmonySpark:
 
     # ------------------------------------------------------------ lifecycle
 
-    def _kmeans_converged(self) -> bool:
-        w = self.p.window_size
-        obj = self.objective_kmeans
-        obj_old = sum(obj[-2 - i] for i in range(w))
-        obj_new = sum(obj[-1 - i] for i in range(w))
-        return abs(obj_old - obj_new) / abs(obj_old) < self.p.epsilon_cluster
-
     def _harmony_converged(self) -> bool:
         o = self.objective_harmony
         return (o[-2] - o[-1]) / abs(o[-2]) < self.p.epsilon_harmony
@@ -778,44 +665,24 @@ class HarmonySpark:
             )
         p = self.p
         self._init_Y()
-        fused = self._cells_nparts == 1
-        if not fused:
-            cells = self._cold_start_pass(
-                self.cells0, with_prev_correction=False, push_objective=True, round_idx=0
-            )
-            self.objective_harmony.append(self.objective_kmeans[-1])
-            # cells0 (its own z_orig copy) is only a source for init + the
-            # round-0 pass; dropping it now halves the steady-state cache —
-            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
-            # (_cold_start_pass materialized `cells` eagerly, so nothing
-            # recomputes through this lineage.)
-            self.cells0.unpersist()
-
+        # single-partition inputs run each round as ONE Arrow pass
+        round_fn = self._fused_round if self._cells_nparts == 1 else self._distributed_round
+        cells = self.cells0
         for round_idx in range(p.max_iter):
-            if fused:
-                # single-partition inputs: cold start + kmeans loop + MoE
-                # partials are ONE Arrow pass per round (_fused_round)
-                cells, iters, combos = self._fused_round(
-                    self.cells0 if round_idx == 0 else cells, round_idx
-                )
-                if round_idx == 0:
-                    # the init objective (reference's init pass) sits
-                    # between the cold replay and the chain replay —
-                    # index it out of the kmeans trace like the
-                    # distributed flow does
-                    self.objective_harmony.insert(
-                        0, self.objective_kmeans[-iters - 1]
-                    )
-                    self.cells0.unpersist()
-            else:
-                if round_idx > 0:
-                    # cold start: re-estimate R from corrected embedding
-                    cells = self._cold_start_pass(
-                        cells, with_prev_correction=True, push_objective=False,
-                        round_idx=round_idx,
-                    )
-                iters = self._kmeans_loop(cells, round_idx)
-                combos = None
+            if round_idx > 0:
+                # truncate lineage between rounds. localCheckpoint already
+                # stores the partitions (MEMORY_AND_DISK) — persisting on
+                # top would hold a SECOND full copy, so track the
+                # checkpoint directly; the checkpoint blocks are released
+                # by the ContextCleaner once this round's pass
+                # materializes and drops the reference.
+                cells = cells.localCheckpoint(eager=True)
+                self._persisted.unpersist()
+                self._persisted = None
+            cells, iters, combos = round_fn(cells, round_idx)
+            if round_idx == 0:
+                # the init pass's objective opens the harmony trace
+                self.objective_harmony.append(self.objective_kmeans[0])
             self.kmeans_rounds.append(iters)
             self.objective_harmony.append(self.objective_kmeans[-1])
             if verbose:
@@ -825,26 +692,12 @@ class HarmonySpark:
                     f"objective {self.objective_kmeans[-1]:.4f}",
                     file=sys.stderr,
                 )
-
-            if combos is None:  # distributed path: separate MoE pass
-                combos = self._moe_partials(cells)
             self._solve_moe(combos)
 
             if progress is not None and progress(round_idx, self.objective_kmeans[-1]) is False:
                 break
             if self._harmony_converged():
                 break
-            # truncate lineage between rounds. localCheckpoint already
-            # stores the partitions (MEMORY_AND_DISK) — persisting on top
-            # would hold a SECOND full copy, so track the checkpoint
-            # directly; the checkpoint blocks are released by the
-            # ContextCleaner once the next round's pass materializes and
-            # drops the reference.
-            ck = cells.localCheckpoint(eager=True)
-            if self._persisted is not None:
-                self._persisted.unpersist()
-                self._persisted = None
-            cells = ck
 
         # final correction materialization (M2)
         self._cells_final = cells

@@ -25,6 +25,9 @@ Kernel map to the reference:
     normalization + penalty-free assignment (:214-228) + fused A4/A6
     partials.
   * estep         — batch-EM diversity E-step, aggregation-only.
+  * round         — single-partition inputs: cold start + the whole
+    E-step loop + MoE partials in one pass, returning the round's final
+    driver state in one row.
   * moe partials  — grouped weighted vector sums keyed by the joint
     covariate-level combo (A8/A9: src/harmony.cpp:561-609).
   * correct       — final M2 materialization.
@@ -32,6 +35,7 @@ Kernel map to the reference:
 
 from __future__ import annotations
 
+import pickle
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -177,6 +181,68 @@ class _PartialAcc:
         out["rdist"] = [float(self.rdist[i]) for i in range(self.nb)]
         return out
 
+    def partials(self):
+        """The per-block (blk, o, rlogr, rdist) partials, in the row
+        layout of ``partial_frame``."""
+        return zip(range(self.nb), self.O, self.rlogr, self.rdist)
+
+
+def expected_E(O: np.ndarray, Pr_b: np.ndarray, B0: int) -> np.ndarray:
+    """E = rowSums(R) Pr_b^T (A5) from a float64 O; a cluster's mass
+    sum_i R_ki is read off the levels of covariate 0."""
+    mass = O[:, :B0].sum(axis=1)
+    return mass[:, None] * Pr_b[None, :].astype(np.float64)
+
+
+def sum_partials(parts, K: int, B: int, nb: int):
+    """Sum (blk, o, rlogr, rdist) partial rows into per-block float64 O,
+    total R·logR and total R·dist — the one accumulation order every
+    consumer of partials uses."""
+    per_block = [np.zeros((K, B), dtype=np.float64) for _ in range(nb)]
+    rlogr = np.zeros(K, dtype=np.float64)
+    rdist = 0.0
+    for blk, o, rl, rd in parts:
+        per_block[blk] += np.asarray(o).reshape(K, B)
+        rlogr += np.asarray(rl)
+        rdist += float(rd)
+    return per_block, rlogr, rdist
+
+
+def finish_partials(parts, nb: int, sigma, theta, Pr_b, B0: int, N: int):
+    """Final reduction of a cold start's or batch E-step's partials
+    (A4/A5/A6): returns (per-block float64 O, float32 O, float32 E,
+    objective).  Shared by the driver and the fused round kernel so both
+    strategies see bit-identical floats."""
+    per_block, rlogr, rdist = sum_partials(parts, len(sigma), len(Pr_b), nb)
+    O = np.sum(per_block, axis=0)
+    O_f32 = O.astype(F32)
+    E_f32 = expected_E(O, Pr_b, B0).astype(F32)
+    return per_block, O_f32, E_f32, km_objective(
+        O_f32, E_f32, sigma, theta, rlogr, rdist, N
+    )
+
+
+def _cold_assign(pdf: pd.DataFrame, st: dict, code_cols, offsets, acc, feature_col: str):
+    """Cold start of one Arrow batch: apply the previous round's
+    correction (recomputing the previous R from ``prev_state``),
+    L2-normalize, assign penalty-free against Y and add the A4/A6
+    partials to ``acc`` (per online block when it has several).
+    Returns (cell_ids, gcodes, zn)."""
+    cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
+    z = _stack(pdf[feature_col])
+    gcodes = _codes_matrix(pdf, code_cols, offsets)
+    W_all = st.get("W_all")  # None at init
+    if W_all is not None:
+        zn_prev = _stack(pdf["zn"])
+        R_prev, _ = recompute_R(zn_prev, gcodes, st["prev_state"], cell_ids=cell_ids)
+        z = _correction(z, R_prev, gcodes, W_all)
+    zn = _normalize_rows(z)
+    dist = 2.0 * (1.0 - zn @ st["Y"])
+    R = _soft_assign(dist, st["sigma"])
+    blocks = block_ids(cell_ids, st.get("round_idx", 0), acc.nb) if acc.nb > 1 else None
+    acc.add(R, dist, gcodes, blocks=blocks)
+    return cell_ids, gcodes, zn.astype(F32)
+
 
 def make_cold_start_kernel(
     bc, code_cols: list[str], offsets: list[int], K: int, B: int, feature_col: str = "z_orig"
@@ -190,33 +256,14 @@ def make_cold_start_kernel(
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st = bc.value
-        Y = st["Y"]
-        sigma = st["sigma"]
-        W_all = st.get("W_all")  # None at init
-        prev_state = st.get("prev_state")
-        nb = st.get("nb", 1)  # >1: emit per-block partials for C3
-        round_idx = st.get("round_idx", 0)
-        acc = _PartialAcc(K, B, n_blocks=nb)
+        acc = _PartialAcc(K, B, n_blocks=st.get("nb", 1))  # nb>1: C3 per-block partials
         template = None
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
-            z = _stack(pdf[feature_col])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            if W_all is not None:
-                zn_prev = _stack(pdf["zn"])
-                R_prev, _ = recompute_R(zn_prev, gcodes, prev_state, cell_ids=cell_ids)
-                zc = _correction(z, R_prev, gcodes, W_all)
-            else:
-                zc = z
-            zn = _normalize_rows(zc)
-            dist = 2.0 * (1.0 - zn @ Y)
-            R = _soft_assign(dist, sigma)
-            blocks = block_ids(cell_ids, round_idx, nb) if nb > 1 else None
-            acc.add(R, dist, gcodes, blocks=blocks)
+            _, _, zn = _cold_assign(pdf, st, code_cols, offsets, acc, feature_col)
             out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn.astype(F32))
+            out["zn"] = list(zn)
             out["blk"] = None
             out["o"] = None
             out["rlogr"] = None
@@ -287,8 +334,7 @@ def blocked_estep_chain(
     for i in range(nb):
         C_i = block_contrib[i]
         O_minus = O - C_i
-        mass_minus = O_minus[:, :B0].sum(axis=1)
-        E_minus = mass_minus[:, None] * Pr_b[None, :].astype(np.float64)
+        E_minus = expected_E(O_minus, Pr_b, B0)
         state_i = {
             "Y": Y,
             "sigma": sigma,
@@ -304,12 +350,6 @@ def blocked_estep_chain(
         block_contrib[i] = C_new
         states.append(state_i)
     return O, states, rlogr_tot, rdist_tot
-
-
-CHAIN_SCHEMA = (
-    "it int, blk int, o array<double>, rlogr array<double>, rdist double, "
-    "combo array<long>, s array<double>, m array<double>"
-)
 
 
 def _moe_accumulate(
@@ -335,27 +375,25 @@ def _moe_accumulate(
             acc[combo_t] = [S, M]
 
 
-def _run_chain(st: dict, batches: list, K: int, B: int, O0_f32, E0_f32, contrib0):
+def _run_chain(st: dict, batches: list, K: int, B: int, O_f32, E_f32, contrib):
     """The WHOLE kmeans E-step loop of one harmony round, in-process —
     valid exactly when the cells DataFrame has a single partition (then
-    every global reduction the per-iteration driver loop performed is
-    partition-local).  Returns (chain_rows, fstate): chain_rows are the
-    per-(iteration, block) partial tuples the driver replays its
-    unchanged bookkeeping from, fstate the FINAL assignment state (the
-    one the driver's replay ends up holding in _r_state).
+    every global reduction the per-iteration driver loop performs is
+    partition-local).  Returns (O_f32, E_f32, objectives, fstate): the
+    loop's final float32 O/E, one kmeans objective per iteration, and
+    the FINAL assignment state — what the distributed loop leaves in
+    the driver's O/E/objective_kmeans/_r_state.
 
-    State carried here mirrors the driver exactly: float32 O/E between
-    iterations, float64 block contributions, the shared
+    ``contrib`` (the cold start's float64 per-block O) is updated in
+    place.  State carried here mirrors the driver exactly: float32 O/E
+    between iterations, float64 block contributions, the shared
     ``blocked_estep_chain`` for the Gauss-Seidel sequence, the shared
     ``km_objective``/``km_window_converged`` for the stop decision."""
     mode = st["mode"]
     nb = st["nb"]
     Y, sigma, theta = st["Y"], st["sigma"], st["theta"]
     Pr_b, B0, N = st["Pr_b"], st["B0"], st["N"]
-    O_f32, E_f32 = O0_f32, E0_f32
-    contrib = [np.array(c, dtype=np.float64) for c in contrib0]
     obj: list[float] = []
-    rows: list[tuple] = []
     fstate: dict | None = None
     for itx in range(st["max_iter"]):
         if mode == "batch":
@@ -372,14 +410,10 @@ def _run_chain(st: dict, batches: list, K: int, B: int, O0_f32, E0_f32, contrib0
             for zn, g, _ids in batches:
                 R, dist = _apply_state(zn, g, state)
                 acc.add(R, dist, g)
-            O64 = acc.O[0]
-            rl_tot, rd_tot = acc.rlogr[0], float(acc.rdist[0])
-            rows.append((itx, 0, list(O64.ravel()), list(rl_tot), rd_tot))
-            O_f32 = O64.astype(F32)
-            mass = O64[:, :B0].sum(axis=1)
-            E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
+            _, O_f32, E_f32, objective = finish_partials(
+                acc.partials(), 1, sigma, theta, Pr_b, B0, N
+            )
         else:
-            per_block: list[tuple] = []
 
             def run_block(i: int, state_i: dict):
                 acc = _PartialAcc(K, B)
@@ -389,9 +423,7 @@ def _run_chain(st: dict, batches: list, K: int, B: int, O0_f32, E0_f32, contrib0
                     if m.any():
                         R, dist = _apply_state(zn[m], g[m], state_i)
                         acc.add(R, dist, g[m])
-                res = (acc.O[0], acc.rlogr[0], float(acc.rdist[0]))
-                per_block.append(res)
-                return res
+                return acc.O[0], acc.rlogr[0], float(acc.rdist[0])
 
             O64, blk_states, rl_tot, rd_tot = blocked_estep_chain(
                 O_f32, contrib, Y, sigma, theta, Pr_b, B0, nb, run_block
@@ -402,24 +434,15 @@ def _run_chain(st: dict, batches: list, K: int, B: int, O0_f32, E0_f32, contrib0
                 "iter": st["round_idx"],
                 "nb": nb,
             }
-            for i, (c_new, rl, rd) in enumerate(per_block):
-                rows.append((itx, i, list(c_new.ravel()), list(rl), rd))
             O_f32 = O64.astype(F32)
-            mass = O64[:, :B0].sum(axis=1)
-            E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
-        obj.append(
-            km_objective(O_f32, E_f32, sigma, theta, rl_tot, rd_tot, N)
-        )
+            E_f32 = expected_E(O64, Pr_b, B0).astype(F32)
+            objective = km_objective(O_f32, E_f32, sigma, theta, rl_tot, rd_tot, N)
+        obj.append(objective)
         if itx > st["window"] and km_window_converged(
             obj, st["window"], st["eps"]
         ):
             break
-    return rows, fstate
-
-
-# tag values for the non-cell rows of the fused round pass
-ROUND_IT_MOE = -1  # MoE combo partial rows
-ROUND_IT_COLD = -2  # cold-start (penalty-free re-assignment) partial rows
+    return O_f32, E_f32, obj, fstate
 
 
 def make_round_kernel(
@@ -427,136 +450,70 @@ def make_round_kernel(
     feature_col: str = "z_orig",
 ) -> Callable:
     """ONE harmony round as ONE Arrow pass (single-partition inputs
-    only): the cold-start correction + normalize + penalty-free
-    re-assignment (make_cold_start_kernel's work), the whole kmeans
-    E-step loop (_run_chain), and the MoE per-combo partials against the
-    loop's final state (_moe_accumulate) — what used to be 3+ jobs per
+    only): the cold start of every batch (_cold_assign, as in
+    make_cold_start_kernel), the whole kmeans E-step loop (_run_chain),
+    and the MoE per-combo partials against the loop's final state
+    (_moe_accumulate) — what the distributed path runs as 3+ jobs per
     round is one (guide §4: collapse tiny mapInPandas round-trips).
 
-    Emits the N (cell_id, z_orig, codes, zn) rows plus tagged partial
-    rows: it == ROUND_IT_COLD carries the cold-start partials (one row
-    per online block), it >= 0 the per-(iteration, block) chain
-    partials, it == ROUND_IT_MOE the MoE combo partials.  The driver
-    replays its unchanged bookkeeping from these rows; every float
-    sequence is shared with the per-iteration distributed path
-    (_PartialAcc / blocked_estep_chain / km_objective), so the two
-    strategies stay bit-identical."""
+    Emits the N (cell_id, z_orig, codes, zn) rows, whose ``state`` is
+    NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
+    pickled dict the driver assigns as-is: ``O``/``E`` (float32, after
+    the loop), ``objectives`` (the init objective first when
+    ``push_objective``, then one per E-step), ``r_state`` (the final
+    assignment state) and ``combos`` ({combo: [S, M]}).  Every float
+    comes from the helpers the distributed path uses (_PartialAcc /
+    finish_partials / blocked_estep_chain / km_objective /
+    _moe_accumulate), so the two strategies stay bit-identical."""
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         st = bc.value
-        Y = st["Y"]
-        sigma = st["sigma"]
-        W_all = st.get("W_all")  # None at init (round 0)
-        prev_state = st.get("prev_state")
-        with_moe = bool(st.get("moe"))
-        mode = st["mode"]
-        nb_chain = st["nb"]
-        blocked = mode == "blocked"
-        # cold partials are per-block only in blocked mode (same as
-        # make_cold_start_kernel's nb handling)
-        nb_cold = nb_chain if blocked else 1
-        round_idx = st["round_idx"]
-        Pr_b, B0 = st["Pr_b"], st["B0"]
-
-        acc = _PartialAcc(K, B, n_blocks=nb_cold)
+        acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
         batches: list[tuple] = []
         moe_batches: list[tuple] = []
-        template = None
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
-            z = _stack(pdf[feature_col])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            if W_all is not None:
-                zn_prev = _stack(pdf["zn"])
-                R_prev, _ = recompute_R(zn_prev, gcodes, prev_state, cell_ids=cell_ids)
-                zc = _correction(z, R_prev, gcodes, W_all)
-            else:
-                zc = z
-            zn = _normalize_rows(zc)
-            dist = 2.0 * (1.0 - zn @ Y)
-            R = _soft_assign(dist, sigma)
-            blocks = block_ids(cell_ids, round_idx, nb_cold) if nb_cold > 1 else None
-            acc.add(R, dist, gcodes, blocks=blocks)
-            zn_f32 = zn.astype(F32)
-            batches.append((zn_f32, gcodes, cell_ids))
-            if with_moe:
-                moe_batches.append(
-                    (
-                        _stack(pdf[feature_col], dtype=np.float64),
-                        pdf[code_cols].to_numpy(dtype=np.int64),
-                    )
+            cell_ids, gcodes, zn = _cold_assign(
+                pdf, st, code_cols, offsets, acc, feature_col
+            )
+            batches.append((zn, gcodes, cell_ids))
+            moe_batches.append(
+                (
+                    _stack(pdf[feature_col], dtype=np.float64),
+                    pdf[code_cols].to_numpy(dtype=np.int64),
                 )
+            )
             out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn_f32)
-            out["it"] = None
-            out["blk"] = None
-            out["o"] = None
-            out["rlogr"] = None
-            out["rdist"] = None
-            out["combo"] = None
-            out["s"] = None
-            out["m"] = None
-            template = out
+            out["zn"] = list(zn)
+            out["state"] = None
             yield out
         if not acc.seen:
             return
 
-        def tagged(frame: pd.DataFrame, it_tag: int) -> pd.DataFrame:
-            full = pd.DataFrame(
-                {c: [None] * len(frame) for c in template.columns}
-            )
-            for c in frame.columns:
-                full[c] = frame[c].to_numpy(dtype=object)
-            full["it"] = it_tag if "it" not in frame.columns else full["it"]
-            return full
-
-        # cold-start partials (the driver's _finish_partials input)
-        yield tagged(acc.partial_frame(), ROUND_IT_COLD)
-
-        # chain start state derived from the cold partials — the same
-        # arithmetic _finish_partials applies driver-side
-        O64_blocks = acc.O  # (nb_cold, K, B) float64
-        O = O64_blocks.sum(axis=0)
-        O_f32 = O.astype(F32)
-        mass = O[:, :B0].sum(axis=1)
-        E_f32 = (mass[:, None] * Pr_b[None, :].astype(np.float64)).astype(F32)
-        contrib0 = (
-            [O64_blocks[i] for i in range(nb_chain)]
-            if blocked
-            else [np.zeros((K, B), dtype=np.float64)]
+        # chain start: the cold partials reduced exactly as the
+        # distributed cold start reduces them driver-side
+        contrib, O_f32, E_f32, cold_obj = finish_partials(
+            acc.partials(), acc.nb, st["sigma"], st["theta"], st["Pr_b"], st["B0"], st["N"]
         )
-        rows, fstate = _run_chain(st, batches, K, B, O_f32, E_f32, contrib0)
-        yield tagged(
-            pd.DataFrame(
-                {
-                    "it": [r[0] for r in rows],
-                    "blk": [r[1] for r in rows],
-                    "o": [r[2] for r in rows],
-                    "rlogr": [r[3] for r in rows],
-                    "rdist": [r[4] for r in rows],
-                }
-            ),
-            0,
+        O_f32, E_f32, objectives, fstate = _run_chain(
+            st, batches, K, B, O_f32, E_f32, contrib
         )
-        if with_moe:
-            macc: dict[tuple, list] = {}
-            for (zn_b, g_b, ids_b), (z64_b, codes_b) in zip(
-                batches, moe_batches
-            ):
-                _moe_accumulate(macc, z64_b, zn_b, g_b, codes_b, fstate, ids_b)
-            yield tagged(
-                pd.DataFrame(
-                    {
-                        "blk": [-1] * len(macc),
-                        "combo": [np.asarray(c, dtype=np.int64) for c in macc],
-                        "s": [v[0] for v in macc.values()],
-                        "m": [v[1].ravel() for v in macc.values()],
-                    }
-                ),
-                ROUND_IT_MOE,
-            )
+        if st["push_objective"]:
+            objectives.insert(0, cold_obj)
+        macc: dict[tuple, list] = {}
+        for (zn_b, g_b, ids_b), (z64_b, codes_b) in zip(batches, moe_batches):
+            _moe_accumulate(macc, z64_b, zn_b, g_b, codes_b, fstate, ids_b)
+        state = {
+            "O": O_f32,
+            "E": E_f32,
+            "objectives": objectives,
+            "r_state": fstate,
+            "combos": macc,
+        }
+        row = {c: [None] for c in ["cell_id", feature_col, *code_cols, "zn"]}
+        row["state"] = [pickle.dumps(state, protocol=pickle.HIGHEST_PROTOCOL)]
+        yield pd.DataFrame(row)
 
     return kernel
 

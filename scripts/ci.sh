@@ -4,6 +4,12 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== compileall (tier-1 step 1) =="
+python -m compileall -q harmony_spark
+
+echo "== perfbench unit tests =="
+python -m pytest perfbench/test_perfbench.py -q
+
 echo "== pytest (sf0.001 fixtures + unit/property/plan/streaming) =="
 python -m pytest tests/ -q
 

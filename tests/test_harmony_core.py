@@ -414,17 +414,19 @@ def test_spark_blocked_estep_matches_numpy(spark, spark_fixture_df):
 
 
 def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
-    """The single-partition fused kmeans-loop pass (ONE Arrow round-trip
-    per harmony round, kernels.make_estep_chain_kernel) must reproduce
-    the per-iteration distributed path EXACTLY — same objective list,
-    same corrected embedding — because the Gauss-Seidel chain and the
-    objective live in shared helpers and a single partition implies a
-    single Arrow batch (identical accumulation order)."""
+    """The single-partition fused round pass (ONE Arrow pass per harmony
+    round, kernels.make_round_kernel, whose state row the driver assigns
+    as-is) must reproduce the distributed per-iteration path EXACTLY —
+    same O/E/Y/W, objective traces, iteration counts, final soft
+    assignment and corrected embedding — because the Gauss-Seidel chain,
+    the partial reductions and the objective live in shared helpers and
+    a single partition implies a single Arrow batch (identical
+    accumulation order)."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, blob, batch = spark_fixture_df
     for mode in ("batch", "blocked"):
-        outs, objs = [], []
+        runs = []
         for force_distributed in (False, True):
             model = HarmonySpark(
                 df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1,
@@ -435,11 +437,56 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
             if force_distributed:
                 model._cells_nparts = 2  # strategy switch only; data unchanged
             out = model.run().orderBy("cell_id").collect()
-            outs.append(np.stack([r["z_corr"] for r in out]))
-            objs.append(list(model.objective_kmeans))
+            R = model.get_R().orderBy("cell_id").collect()
+            runs.append(
+                {
+                    "z_corr": np.stack([r["z_corr"] for r in out]),
+                    "R": np.stack([r["r"] for r in R]),
+                    "R_ids": [r["cell_id"] for r in R],
+                    "O": model.get_O(),
+                    "E": model.get_E(),
+                    "Y": model.get_Y(),
+                    "W_all": model.W_all,
+                    "objective_kmeans": list(model.objective_kmeans),
+                    "objective_harmony": list(model.objective_harmony),
+                    "kmeans_rounds": list(model.kmeans_rounds),
+                }
+            )
             model.cleanup()
-        assert objs[0] == objs[1], (mode, objs)
-        np.testing.assert_array_equal(outs[0], outs[1])
+        fused, dist = runs
+        for key in fused:
+            if isinstance(fused[key], list):
+                assert fused[key] == dist[key], (mode, key)
+            else:
+                np.testing.assert_array_equal(fused[key], dist[key], err_msg=f"{mode} {key}")
+
+
+@pytest.mark.parametrize("path", ["fused", "distributed"])
+def test_no_checkpoint_after_last_round(spark, spark_fixture_df, monkeypatch, path):
+    """Lineage is truncated only between rounds: with early stop off, a
+    max_iter-round fit takes exactly max_iter - 1 localCheckpoints."""
+    from harmony_spark.core.algorithm import HarmonySpark
+
+    df, *_ = spark_fixture_df
+    model = HarmonySpark(
+        df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
+        nclust=6, max_iter=3, early_stop=False, seed=5,
+    )
+    if path == "distributed":
+        model._cells_nparts = 2
+    cls = type(model.cells0)
+    real = cls.localCheckpoint
+    calls = []
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    assert model.run().count() == df.count()
+    model.cleanup()
+    assert len(model.kmeans_rounds) == 3
+    assert len(calls) == 2
 
 
 def test_c5_support_filter_active_cross_oracle(spark, spark_fixture_df):
@@ -715,10 +762,11 @@ def test_load_model_refuses_precision_downcast(spark, spark_fixture_df, tmp_path
         load_model(spark, path)
 
 
-def test_progress_callback_and_abort(spark, sf_dir):
+@pytest.mark.parametrize("path", ["fused", "distributed"])
+def test_progress_callback_and_abort(spark, sf_dir, path):
     """C6 progress/abort: the callback sees every round's objective, and
     returning False stops the loop early while still producing a full
-    corrected embedding."""
+    corrected embedding — on both round strategies."""
     from pyspark.sql import functions as F
 
     from harmony_spark.core.algorithm import HarmonySpark
@@ -729,10 +777,14 @@ def test_progress_callback_and_abort(spark, sf_dir):
     )
 
     def build():
-        return HarmonySpark(
+        model = HarmonySpark(
             e, ["label"], features_col="embedding", id_col="vec_id",
             nclust=3, max_iter=4, lamb=1.0, sigma=0.1, seed=7,
         )
+        assert model._cells_nparts == 1  # fixture is fused-eligible
+        if path == "distributed":
+            model._cells_nparts = 2  # strategy switch only; data unchanged
+        return model
 
     seen = []
     m1 = build()
