@@ -168,8 +168,8 @@ class HarmonySpark:
         # per-job scheduler floor costs far more than the lost map
         # parallelism (a 64k-cell task is a few tens of MB / tens of ms
         # of vectorized numpy, guide §2.2: fewer, larger partitions; §4:
-        # collapse tiny mapInPandas round-trips). At 1e9 cells this
-        # branch never fires. repartition/mapInPandas/localCheckpoint
+        # collapse tiny Python-worker round-trips). At 1e9 cells this
+        # branch never fires. repartition/mapInArrow/localCheckpoint
         # all preserve the partition count across rounds.
         if N <= FUSE_CELLS:
             target_parts = 1
@@ -262,7 +262,7 @@ class HarmonySpark:
         # the partials collect filters AFTER the cache layer, so its one
         # job both fills the round's cache and returns the O/E partials
         full = self._swap_persist(
-            source.mapInPandas(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
+            source.mapInArrow(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
         )
         parts = (
             full.where(F.col("cell_id").isNull())
@@ -300,7 +300,7 @@ class HarmonySpark:
             )
             parts = (
                 cells.select("cell_id", "zn", *self.code_cols)
-                .mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA)
+                .mapInArrow(kernel, schema=kernels.PARTIAL_SCHEMA)
                 .collect()
             )
             self._r_state = state
@@ -327,7 +327,7 @@ class HarmonySpark:
             parts = (
                 cells.where(block_expr == i)
                 .select("cell_id", "zn", *self.code_cols)
-                .mapInPandas(kernel, schema=kernels.PARTIAL_SCHEMA)
+                .mapInArrow(kernel, schema=kernels.PARTIAL_SCHEMA)
                 .collect()
             )
             (C_new,), rl, rd = kernels.sum_partials(parts, p.K, p.B, 1)
@@ -421,7 +421,7 @@ class HarmonySpark:
             self._broadcast(**state), self.code_cols, p.offsets, p.K, p.B
         )
         full = self._swap_persist(
-            source.select(*cols).mapInPandas(
+            source.select(*cols).mapInArrow(
                 kernel, schema=self._pass_schema("state binary")
             )
         )
@@ -453,7 +453,7 @@ class HarmonySpark:
         p = self.p
         bc = self._broadcast(**self._r_state)
         kernel = kernels.make_moe_partials_kernel(bc, self.code_cols, p.offsets, p.K, p.d)
-        rows = cells.select("cell_id", "z_orig", "zn", *self.code_cols).mapInPandas(
+        rows = cells.select("cell_id", "z_orig", "zn", *self.code_cols).mapInArrow(
             kernel, schema="combo array<long>, s array<double>, m array<double>"
         ).collect()
         acc: dict[tuple, list] = {}
@@ -529,7 +529,7 @@ class HarmonySpark:
                 .limit(_INIT_SAMPLE_CAP)
                 .orderBy("cell_id")
             )
-        Z = np.stack([r["z_orig"] for r in sample.collect()]).astype(F32)
+        Z = kernels._matrix(sample.toArrow(), "z_orig")
         Zn = Z / np.maximum(np.linalg.norm(Z, axis=1, keepdims=True), 1e-12)
         self.Y = kmeans_centers(Zn, p.K, p.seed)  # (d, K), L2-normalized cols
 
@@ -704,7 +704,7 @@ class HarmonySpark:
         bc = self._broadcast(W_all=self.W_all, r_state=self._r_state)
         kernel = kernels.make_correct_kernel(bc, self.code_cols, p.offsets)
         codes = ", ".join(f"{c} int" for c in self.code_cols)
-        result = cells.mapInPandas(
+        result = cells.mapInArrow(
             kernel, schema=f"cell_id long, {codes}, z_corr array<{SPARK_SCALAR}>"
         )
         return result
@@ -738,7 +738,7 @@ class HarmonySpark:
         bc = self._broadcast(W_all=self.W_all, r_state=rs)
         kernel = kernels.make_transform_kernel(bc, self.code_cols, p.offsets)
         codes = ", ".join(f"{c} int" for c in self.code_cols)
-        return cells.mapInPandas(
+        return cells.mapInArrow(
             kernel, schema=f"cell_id long, {codes}, z_corr array<{SPARK_SCALAR}>"
         )
 
@@ -760,7 +760,7 @@ class HarmonySpark:
         bc = self._broadcast(W_all=self.W_all, r_state=rs)
         kernel = kernels.make_infer_assignment_kernel(bc, self.code_cols, self.p.offsets)
         codes = ", ".join(f"{c} int" for c in self.code_cols)
-        return cells.mapInPandas(
+        return cells.mapInArrow(
             kernel, schema=f"cell_id long, {codes}, r array<{SPARK_SCALAR}>"
         )
 
@@ -788,7 +788,7 @@ class HarmonySpark:
             raise RuntimeError("run() must complete before get_R()")
         bc = self._broadcast(**self._r_state)
         kernel = kernels.make_assignment_kernel(bc, self.code_cols, self.p.offsets)
-        return self._cells_final.select("cell_id", "zn", *self.code_cols).mapInPandas(
+        return self._cells_final.select("cell_id", "zn", *self.code_cols).mapInArrow(
             kernel, schema=f"cell_id long, r array<{SPARK_SCALAR}>"
         )
 

@@ -1,10 +1,13 @@
 """Arrow-vectorized kernels for the harmony Spark engine.
 
-Each kernel is a mapInPandas function factory: the tiny model state
+Each kernel is a mapInArrow function factory: the tiny model state
 (Y, O, E, W, sigma, theta) arrives via a Spark broadcast, the N-sized
-data streams through as Arrow batches, and all math runs in NumPy
-float32 (mirroring the reference's float32 compute path,
-/root/reference/src/types.h:5-9). The N-sized data never visits the
+data streams through as ``pyarrow.RecordBatch``es, and all math runs in
+NumPy float32 (mirroring the reference's float32 compute path,
+src/types.h:5-9). Embeddings cross the Python-worker boundary as
+contiguous buffers: ``_matrix`` views a list column as an (n, d) array
+and ``_list_array`` wraps an (n, d) array as a list column, so no
+per-cell Python object is ever built. The N-sized data never visits the
 driver (SURVEY.md §3.4).
 
 Key design: **R is never materialized.** The soft assignment is a pure
@@ -39,24 +42,78 @@ import pickle
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from harmony_spark.core.scalars import SCALAR as F32  # HARMONY_SCALAR_DOUBLE switch
 
 PARTIAL_SCHEMA = "blk int, o array<double>, rlogr array<double>, rdist double"
+# Arrow types of the declared Spark columns that a kernel may emit as NULL
+_VEC = pa.list_(pa.from_numpy_dtype(F32))  # array<SPARK_SCALAR>
+_PARTIAL_FIELDS = [
+    ("blk", pa.int32()),
+    ("o", pa.list_(pa.float64())),
+    ("rlogr", pa.list_(pa.float64())),
+    ("rdist", pa.float64()),
+]
 
 
-def _stack(series: pd.Series, dtype=F32) -> np.ndarray:
-    return np.stack(series.to_numpy()).astype(dtype, copy=False)
+def _matrix(data: pa.RecordBatch | pa.Table, name: str, dtype=F32) -> np.ndarray:
+    """Column ``name`` (a list of equal-length numbers per row) as an
+    (n, d) array — a view of the Arrow values buffer when its element
+    type is ``dtype``.  Rows of unequal length or NULL rows would
+    misalign a flat reshape, so they raise ValueError."""
+    col = data.column(name)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy()
+    lens = np.diff(off)
+    if col.null_count or (lens != lens[:1]).any():
+        raise ValueError(
+            f"column {name!r} holds NULL or ragged arrays: every cell needs "
+            "an embedding of the same length"
+        )
+    values = col.values.slice(off[0], off[-1] - off[0]).to_numpy(zero_copy_only=False)
+    return values.reshape(len(col), lens[0] if len(lens) else 0).astype(dtype, copy=False)
+
+
+def _list_array(M: np.ndarray) -> pa.ListArray:
+    """An (n, d) array as an Arrow list column over its (contiguous)
+    buffer, one d-long list per row."""
+    n, d = M.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d)
+    return pa.ListArray.from_arrays(offsets, np.ascontiguousarray(M).reshape(-1))
+
+
+def _codes(batch: pa.RecordBatch, code_cols: list[str], offsets=None) -> np.ndarray:
+    """(n, C) int64 covariate codes; with ``offsets``, global level
+    indices (code + the covariate's offset)."""
+    codes = np.column_stack([batch.column(c).to_numpy() for c in code_cols]).astype(np.int64)
+    if offsets is None:
+        return codes
+    return codes + np.asarray(offsets, dtype=np.int64)[None, :]
+
+
+def _cell_schema(feature_col: str, code_cols: list[str], extra: list) -> pa.Schema:
+    """Arrow layout of a row-writing pass (``HarmonySpark._pass_schema``):
+    the cell columns, then the ``extra`` columns of its non-cell rows."""
+    codes = [(c, pa.int32()) for c in code_cols]
+    return pa.schema(
+        [("cell_id", pa.int64()), (feature_col, _VEC), *codes, ("zn", _VEC), *extra]
+    )
+
+
+def _with_nulls(schema: pa.Schema, cols: dict) -> pa.RecordBatch:
+    """A batch of ``schema`` from ``cols`` (name -> array); every other
+    column is NULL."""
+    n = len(next(iter(cols.values())))
+    return pa.RecordBatch.from_arrays(
+        [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def _normalize_rows(X: np.ndarray) -> np.ndarray:
     return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-
-
-def _codes_matrix(pdf: pd.DataFrame, code_cols: list[str], offsets: list[int]) -> np.ndarray:
-    codes = pdf[code_cols].to_numpy(dtype=np.int64)
-    return codes + np.asarray(offsets, dtype=np.int64)[None, :]
 
 
 def _soft_assign(dist: np.ndarray, sigma: np.ndarray) -> np.ndarray:
@@ -162,28 +219,19 @@ class _PartialAcc:
             self.rlogr[i] += safe[sel].sum(axis=0)
             self.rdist[i] += float(rd[sel].sum())
 
-    def partial_frame(self) -> pd.DataFrame:
-        rows = [i for i in range(self.nb)]
-        return pd.DataFrame(
-            {
-                "blk": rows,
-                "o": [self.O[i].ravel() for i in rows],
-                "rlogr": [self.rlogr[i] for i in rows],
-                "rdist": [float(self.rdist[i]) for i in rows],
-            }
-        )
-
-    def tag_rows(self, template: pd.DataFrame) -> pd.DataFrame:
-        out = pd.DataFrame({c: [None] * self.nb for c in template.columns})
-        out["blk"] = list(range(self.nb))
-        out["o"] = [self.O[i].ravel() for i in range(self.nb)]
-        out["rlogr"] = [self.rlogr[i] for i in range(self.nb)]
-        out["rdist"] = [float(self.rdist[i]) for i in range(self.nb)]
-        return out
+    def columns(self) -> dict:
+        """The per-block partials as Arrow columns of PARTIAL_SCHEMA,
+        one row per block."""
+        return {
+            "blk": pa.array(np.arange(self.nb, dtype=np.int32)),
+            "o": _list_array(self.O.reshape(self.nb, -1)),
+            "rlogr": _list_array(self.rlogr),
+            "rdist": pa.array(self.rdist),
+        }
 
     def partials(self):
         """The per-block (blk, o, rlogr, rdist) partials, in the row
-        layout of ``partial_frame``."""
+        layout of ``columns``."""
         return zip(range(self.nb), self.O, self.rlogr, self.rdist)
 
 
@@ -222,18 +270,18 @@ def finish_partials(parts, nb: int, sigma, theta, Pr_b, B0: int, N: int):
     )
 
 
-def _cold_assign(pdf: pd.DataFrame, st: dict, code_cols, offsets, acc, feature_col: str):
+def _cold_assign(batch: pa.RecordBatch, st: dict, code_cols, offsets, acc, feature_col: str):
     """Cold start of one Arrow batch: apply the previous round's
     correction (recomputing the previous R from ``prev_state``),
     L2-normalize, assign penalty-free against Y and add the A4/A6
     partials to ``acc`` (per online block when it has several).
     Returns (cell_ids, gcodes, zn)."""
-    cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
-    z = _stack(pdf[feature_col])
-    gcodes = _codes_matrix(pdf, code_cols, offsets)
+    cell_ids = batch.column("cell_id").to_numpy()
+    z = _matrix(batch, feature_col)
+    gcodes = _codes(batch, code_cols, offsets)
     W_all = st.get("W_all")  # None at init
     if W_all is not None:
-        zn_prev = _stack(pdf["zn"])
+        zn_prev = _matrix(batch, "zn")
         R_prev, _ = recompute_R(zn_prev, gcodes, st["prev_state"], cell_ids=cell_ids)
         z = _correction(z, R_prev, gcodes, W_all)
     zn = _normalize_rows(z)
@@ -251,27 +299,22 @@ def make_cold_start_kernel(
     round's correction (recomputing the previous R from `prev_state`),
     L2-normalize, penalty-free re-assignment, fused A4/A6 partials
     (init: src/harmony.cpp:131-146; cold start: :214-228). Emits rows
-    (cell_id, z_orig, codes, zn) plus one NULL-tagged partial row per
-    partition."""
+    (cell_id, z_orig, codes, zn) plus one partial row per online block
+    (NULL cell_id) per partition."""
+    schema = _cell_schema(feature_col, code_cols, _PARTIAL_FIELDS)
+    passed = ["cell_id", feature_col, *code_cols]
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         acc = _PartialAcc(K, B, n_blocks=st.get("nb", 1))  # nb>1: C3 per-block partials
-        template = None
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            _, _, zn = _cold_assign(pdf, st, code_cols, offsets, acc, feature_col)
-            out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn)
-            out["blk"] = None
-            out["o"] = None
-            out["rlogr"] = None
-            out["rdist"] = None
-            template = out
-            yield out
+            _, _, zn = _cold_assign(batch, st, code_cols, offsets, acc, feature_col)
+            cols = {c: batch.column(c) for c in passed}
+            yield _with_nulls(schema, {**cols, "zn": _list_array(zn)})
         if acc.seen:
-            yield acc.tag_rows(template)
+            yield _with_nulls(schema, acc.columns())
 
     return kernel
 
@@ -297,11 +340,13 @@ def km_objective(
 
 
 def km_window_converged(obj: list[float], window: int, eps: float) -> bool:
-    """The sliding-window relative-change test of
-    HarmonySpark._kmeans_converged, expressed over a plain list so the
-    fused chain kernel can replay the identical stop decision (the first
-    possible check happens after window+2 in-loop objectives, so the
-    pre-loop history is never referenced)."""
+    """The sliding-window relative-change stop test of the kmeans loop
+    (src/harmony.cpp:173-190) over a plain objective list — ONE
+    definition shared by the distributed loop
+    (``HarmonySpark._kmeans_loop``) and the fused chain kernel
+    (``_run_chain``), so both make the identical stop decision (the
+    first possible check happens after window+2 in-loop objectives, so
+    the pre-loop history is never referenced)."""
     obj_old = sum(obj[-2 - i] for i in range(window))
     obj_new = sum(obj[-1 - i] for i in range(window))
     return abs(obj_old - obj_new) / abs(obj_old) < eps
@@ -454,7 +499,7 @@ def make_round_kernel(
     make_cold_start_kernel), the whole kmeans E-step loop (_run_chain),
     and the MoE per-combo partials against the loop's final state
     (_moe_accumulate) — what the distributed path runs as 3+ jobs per
-    round is one (guide §4: collapse tiny mapInPandas round-trips).
+    round is one (guide §4: collapse tiny Python-worker round-trips).
 
     Emits the N (cell_id, z_orig, codes, zn) rows, whose ``state`` is
     NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
@@ -466,28 +511,26 @@ def make_round_kernel(
     finish_partials / blocked_estep_chain / km_objective /
     _moe_accumulate), so the two strategies stay bit-identical."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    schema = _cell_schema(feature_col, code_cols, [("state", pa.binary())])
+    passed = ["cell_id", feature_col, *code_cols]
+
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
         batches: list[tuple] = []
         moe_batches: list[tuple] = []
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
             cell_ids, gcodes, zn = _cold_assign(
-                pdf, st, code_cols, offsets, acc, feature_col
+                batch, st, code_cols, offsets, acc, feature_col
             )
             batches.append((zn, gcodes, cell_ids))
             moe_batches.append(
-                (
-                    _stack(pdf[feature_col], dtype=np.float64),
-                    pdf[code_cols].to_numpy(dtype=np.int64),
-                )
+                (_matrix(batch, feature_col, np.float64), _codes(batch, code_cols))
             )
-            out = pdf[["cell_id", feature_col, *code_cols]].copy()
-            out["zn"] = list(zn)
-            out["state"] = None
-            yield out
+            cols = {c: batch.column(c) for c in passed}
+            yield _with_nulls(schema, {**cols, "zn": _list_array(zn)})
         if not acc.seen:
             return
 
@@ -511,9 +554,8 @@ def make_round_kernel(
             "r_state": fstate,
             "combos": macc,
         }
-        row = {c: [None] for c in ["cell_id", feature_col, *code_cols, "zn"]}
-        row["state"] = [pickle.dumps(state, protocol=pickle.HIGHEST_PROTOCOL)]
-        yield pd.DataFrame(row)
+        blob = pickle.dumps(state, protocol=pickle.HIGHEST_PROTOCOL)
+        yield _with_nulls(schema, {"state": pa.array([blob], pa.binary())})
 
     return kernel
 
@@ -524,19 +566,19 @@ def make_estep_kernel(bc, code_cols: list[str], offsets: list[int], K: int, B: i
     per-partition partials — no N-sized output at all
     (src/harmony.cpp:318-323 semantics; SURVEY.md §7.5)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         acc = _PartialAcc(K, B)
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            zn = _stack(pdf["zn"])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
+            zn = _matrix(batch, "zn")
+            gcodes = _codes(batch, code_cols, offsets)
+            cell_ids = batch.column("cell_id").to_numpy()
             R, dist = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
             acc.add(R, dist, gcodes)
         if acc.seen:
-            yield acc.partial_frame()
+            yield pa.RecordBatch.from_pydict(acc.columns())
 
     return kernel
 
@@ -549,24 +591,24 @@ def make_moe_partials_kernel(
     pass, with R recomputed from the broadcast assignment state. Emits
     one row per (partition, combo)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         acc: dict[tuple, list] = {}
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            z = _stack(pdf[feature_col], dtype=np.float64)
-            zn = _stack(pdf["zn"])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
-            codes = pdf[code_cols].to_numpy(dtype=np.int64)
+            z = _matrix(batch, feature_col, np.float64)
+            zn = _matrix(batch, "zn")
+            codes = _codes(batch, code_cols)
+            gcodes = codes + np.asarray(offsets, dtype=np.int64)[None, :]
+            cell_ids = batch.column("cell_id").to_numpy()
             _moe_accumulate(acc, z, zn, gcodes, codes, st, cell_ids)
         if acc:
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "combo": [np.asarray(c, dtype=np.int64) for c in acc],
-                    "s": [v[0] for v in acc.values()],
-                    "m": [v[1].ravel() for v in acc.values()],
+                    "combo": _list_array(np.array(list(acc), dtype=np.int64)),
+                    "s": _list_array(np.stack([v[0] for v in acc.values()])),
+                    "m": _list_array(np.stack([v[1].ravel() for v in acc.values()])),
                 }
             )
 
@@ -577,16 +619,18 @@ def make_assignment_kernel(bc, code_cols: list[str], offsets: list[int]) -> Call
     """getR parity (/root/reference/src/harmony.cpp:677-679): emit the
     final soft assignment as (cell_id, r)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            zn = _stack(pdf["zn"])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
+            zn = _matrix(batch, "zn")
+            gcodes = _codes(batch, code_cols, offsets)
+            cell_ids = batch.column("cell_id").to_numpy()
             R, _ = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
-            yield pd.DataFrame({"cell_id": pdf["cell_id"], "r": list(R.astype(F32))})
+            yield pa.RecordBatch.from_pydict(
+                {"cell_id": batch.column("cell_id"), "r": _list_array(R.astype(F32))}
+            )
 
     return kernel
 
@@ -606,32 +650,28 @@ def make_infer_assignment_kernel(bc, code_cols: list[str], offsets: list[int]) -
     sentinel batch and compares against the marginal mix, so a novel
     population FLAGS instead of crashing the stream."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         rs = st["r_state"]
         nopen = {k: v for k, v in rs.items() if k != "penalty"}
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            z = _stack(pdf["z_orig"])
+            z = _matrix(batch, "z_orig")
             zn = _normalize_rows(z)
-            codes_raw = pdf[code_cols]
-            seen = codes_raw.notna().all(axis=1).to_numpy()
+            filled = {c: batch.column(c).fill_null(-1) for c in code_cols}
+            codes = np.column_stack([filled[c].to_numpy() for c in code_cols])
+            seen = (codes >= 0).all(axis=1)
             # assign() always flattens a blocked state before broadcast
-            R = np.empty((len(pdf), rs["Y"].shape[1]), dtype=F32)
+            R = np.empty((batch.num_rows, rs["Y"].shape[1]), dtype=F32)
             if seen.any():
-                gcodes = (
-                    codes_raw.to_numpy(dtype="float64")[seen].astype(np.int64)
-                    + np.asarray(offsets, dtype=np.int64)[None, :]
-                )
+                gcodes = codes[seen].astype(np.int64) + np.asarray(offsets, dtype=np.int64)
                 R[seen], _ = _apply_state(zn[seen], gcodes, rs)
             if (~seen).any():
                 R[~seen], _ = _apply_state(zn[~seen], None, nopen)
-            out = pdf[["cell_id"]].copy()
-            for c in code_cols:
-                out[c] = codes_raw[c].fillna(-1).astype("int32")
-            out["r"] = list(R.astype(F32))
-            yield out
+            yield pa.RecordBatch.from_pydict(
+                {"cell_id": batch.column("cell_id"), **filled, "r": _list_array(R.astype(F32))}
+            )
 
     return kernel
 
@@ -646,28 +686,32 @@ def make_transform_kernel(bc, code_cols: list[str], offsets: list[int]) -> Calla
     (Use assign()/drift_monitor to detect such populations, then refit
     with the new level present.)"""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         W_all = st["W_all"]
         rs = st["r_state"]
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            bad = pdf[code_cols].isna().any(axis=1)
-            if bad.any():
+            unseen = [batch.column(c).is_null().to_numpy(zero_copy_only=False) for c in code_cols]
+            n_bad = int(np.logical_or.reduce(unseen).sum())
+            if n_bad:
                 raise ValueError(
-                    f"transform(): {int(bad.sum())} cells carry covariate "
+                    f"transform(): {n_bad} cells carry covariate "
                     "levels unseen at fit time (no W coefficients exist "
                     "for them); detect with drift_monitor and refit"
                 )
-            z = _stack(pdf["z_orig"])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
+            z = _matrix(batch, "z_orig")
+            gcodes = _codes(batch, code_cols, offsets)
             zn = _normalize_rows(z)
             R, _ = _apply_state(zn, gcodes, rs)
             zc = _correction(z, R, gcodes, W_all)
-            out = pdf[["cell_id", *code_cols]].copy()
-            out["z_corr"] = list(zc.astype(F32))
-            yield out
+            yield pa.RecordBatch.from_pydict(
+                {
+                    **{c: batch.column(c) for c in ["cell_id", *code_cols]},
+                    "z_corr": _list_array(zc.astype(F32)),
+                }
+            )
 
     return kernel
 
@@ -678,21 +722,24 @@ def make_correct_kernel(
     """Final materialization: z_corr = z_orig - correction (M2), with R
     recomputed from the final assignment state."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
         W_all = st["W_all"]
         rs = st["r_state"]
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            z = _stack(pdf[feature_col])
-            zn = _stack(pdf["zn"])
-            gcodes = _codes_matrix(pdf, code_cols, offsets)
-            cell_ids = pdf["cell_id"].to_numpy(dtype=np.int64)
+            z = _matrix(batch, feature_col)
+            zn = _matrix(batch, "zn")
+            gcodes = _codes(batch, code_cols, offsets)
+            cell_ids = batch.column("cell_id").to_numpy()
             R, _ = recompute_R(zn, gcodes, rs, cell_ids=cell_ids)
             zc = _correction(z, R, gcodes, W_all)
-            out = pdf[["cell_id", *code_cols]].copy()
-            out["z_corr"] = list(zc.astype(F32))
-            yield out
+            yield pa.RecordBatch.from_pydict(
+                {
+                    **{c: batch.column(c) for c in ["cell_id", *code_cols]},
+                    "z_corr": _list_array(zc.astype(F32)),
+                }
+            )
 
     return kernel

@@ -10,7 +10,7 @@ conditional distribution P(cluster | batch) flags batches whose new
 cells no longer look like their training population — the signal that
 the frozen correction (transform()) has gone stale and a refit is due.
 
-Scale shape: the per-cell work is one Arrow batch pass (mapInPandas);
+Scale shape: the per-cell work is one Arrow batch pass (mapInArrow);
 stream state per key is (long, K doubles) — a few hundred bytes per
 batch level regardless of row count, so a 1000-executor stream carries
 state proportional to |levels|, not |cells|.  The statistic is a

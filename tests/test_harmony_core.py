@@ -462,6 +462,42 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
 
 
 @pytest.mark.parametrize("path", ["fused", "distributed"])
+@pytest.mark.parametrize("bad", ["short", "null"])
+def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
+    """Embeddings are read as one flat buffer reshaped to (n, d), so a
+    single short or NULL row would shift every later row.  The fit must
+    refuse such input with an error naming the column: on the driver's
+    init sample, and inside the kernels when a warm start skips the
+    sample."""
+    from harmony_spark.core.algorithm import HarmonySpark
+
+    df, Z, *_ = spark_fixture_df
+    d = Z.shape[1]
+    broken = (
+        F.slice("features", 1, d - 1) if bad == "short"
+        else F.lit(None).cast("array<float>")
+    )
+    df_bad = df.withColumn(
+        "features", F.when(F.col("cell_id") == 17, broken).otherwise(F.col("features"))
+    )
+    for init_Y in (None, np.eye(d, 6, dtype=np.float32)):
+        model = HarmonySpark(
+            df_bad, ["batch"], id_col="cell_id", nclust=6, max_iter=1,
+            lamb=1.0, seed=3, init_Y=init_Y,
+        )
+        if path == "distributed":
+            model._cells_nparts = 2  # strategy switch only; data unchanged
+        # in a kernel the ValueError reaches the driver inside Spark's
+        # PythonException, whose message carries the worker traceback
+        with pytest.raises(
+            ValueError if init_Y is None else Exception,
+            match="column 'z_orig' holds NULL or ragged arrays",
+        ):
+            model.run().count()
+        model.cleanup()
+
+
+@pytest.mark.parametrize("path", ["fused", "distributed"])
 def test_no_checkpoint_after_last_round(spark, spark_fixture_df, monkeypatch, path):
     """Lineage is truncated only between rounds: with early stop off, a
     max_iter-round fit takes exactly max_iter - 1 localCheckpoints."""

@@ -4,7 +4,9 @@
 float64 AND keep Spark/NumPy-oracle parity — at double precision the
 cross-oracle tolerance tightens by ~3 orders of magnitude, which is
 itself the check that the f64 path really runs end-to-end (an f32
-kernel hiding behind an f64 schema would fail it).
+kernel hiding behind an f64 schema would fail it).  Every kernel that
+emits cell vectors is covered: both round strategies, get_R(),
+assign() and transform().
 
 Runs in a subprocess because the switch is read at import time.
 """
@@ -44,16 +46,36 @@ _SCRIPT = textwrap.dedent(
         df, ["batch"], id_col="cell_id", features_col="z",
         theta=1.0, sigma=0.1, lamb=1.0, nclust=20, max_iter=3, seed=7,
     )
-    out_df = model.run()
-    elem = dict(out_df.dtypes)["z_corr"]
-    assert elem == "array<double>", elem
-    out = out_df.orderBy("cell_id").collect()
-    Zs = np.stack([r["z_corr"] for r in out])
-    assert Zs.dtype == np.float64
+
+    def f64_rows(out_df, col):
+        elem = dict(out_df.dtypes)[col]
+        assert elem == "array<double>", (col, elem)
+        M = np.stack([r[col] for r in out_df.orderBy("cell_id").collect()])
+        assert M.dtype == np.float64
+        return M
 
     p = resolve(Z, batch, 3, theta=1.0, nclust=20, max_iter=3, seed=7)
     h = run_harmony_numpy(Z, batch[:, None], p, mode="batch")
-    np.testing.assert_allclose(Zs, h.Z_corr, rtol=1e-6, atol=1e-6)
+    np.testing.assert_allclose(f64_rows(model.run(), "z_corr"), h.Z_corr, rtol=1e-6, atol=1e-6)
+
+    # the distributed round strategy (cold start / E-step / MoE passes)
+    dist = HarmonySpark(
+        df, ["batch"], id_col="cell_id", features_col="z",
+        theta=1.0, sigma=0.1, lamb=1.0, nclust=20, max_iter=3, seed=7,
+    )
+    dist._cells_nparts = 2  # strategy switch only; data unchanged
+    np.testing.assert_allclose(f64_rows(dist.run(), "z_corr"), h.Z_corr, rtol=1e-6, atol=1e-6)
+    np.testing.assert_allclose(f64_rows(dist.get_R(), "r"), h.R, rtol=1e-6, atol=1e-6)
+
+    # inference on the training cells against the frozen state, checked
+    # against the same math run driver-side in float64
+    from harmony_spark.core import kernels
+    gcodes = batch[:, None].astype(np.int64)
+    zn = kernels._normalize_rows(Z.astype(np.float64))
+    R_new, _ = kernels._apply_state(zn, gcodes, model._r_state)
+    np.testing.assert_allclose(f64_rows(model.assign(df, "z"), "r"), R_new, rtol=1e-6, atol=1e-6)
+    zc = kernels._correction(Z.astype(np.float64), R_new, gcodes, model.W_all)
+    np.testing.assert_allclose(f64_rows(model.transform(df, "z"), "z_corr"), zc, rtol=1e-6, atol=1e-6)
     spark.stop()
     print("F64_OK")
     """
