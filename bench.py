@@ -38,51 +38,6 @@ import sys
 import time
 
 
-def _spin_sentinel() -> float:
-    """Contention sentinel (additions-only diagnostic): wall-time one
-    fixed chunk of single-threaded CPU work.  Run before and after the
-    timed loop; a post/pre ratio far from 1 (or a pre far above the
-    box's known-quiet value, ~45 ms on the round-7/8 hardware) flags a
-    noisy/loaded box so regression triage can mechanically discount the
-    run.  Pure arithmetic — no imports, no I/O, no Spark."""
-    t0 = time.perf_counter()
-    acc = 0
-    for i in range(2_000_000):
-        acc += i * i
-    return round((time.perf_counter() - t0) * 1000, 1)
-
-
-def _jvm_counters(spark) -> dict:
-    """Driver-JVM GC totals + storage-memory snapshot (local mode: the
-    driver JVM IS the executor, so these cover the whole run).  Best
-    effort — failures return {}."""
-    try:
-        jvm = spark.sparkContext._jvm
-        mf = jvm.java.lang.management.ManagementFactory
-        gc_ms = sum(
-            b.getCollectionTime()
-            for b in mf.getGarbageCollectorMXBeans().toArray()
-        )
-        heap = mf.getMemoryMXBean().getHeapMemoryUsage()
-        status = spark.sparkContext.statusTracker()
-        mem = {}
-        try:
-            for eid in status.getExecutorInfos():
-                mem = {
-                    "storage_used_mb": round(eid.memoryUsed() / 2**20, 1),
-                }
-                break
-        except Exception:  # noqa: BLE001
-            pass
-        return {
-            "gc_time_s": round(gc_ms / 1000, 1),
-            "heap_used_mb": round(heap.getUsed() / 2**20, 1),
-            **mem,
-        }
-    except Exception:  # noqa: BLE001
-        return {}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -106,8 +61,6 @@ def main() -> None:
         specs["q08_batch_counts"].fn(spark, sf_dir).collect()
     except Exception as exc:  # noqa: BLE001
         print(f"# warmup failed: {exc}", file=sys.stderr)
-
-    sentinel_pre_ms = _spin_sentinel()
 
     timings: dict[str, float | dict] = {}
     errors: dict[str, str] = {}

@@ -8,24 +8,24 @@ and is broadcast each pass. The soft assignment R is NEVER materialized
 ``self._r_state`` and recomputed inside whichever kernel needs it. The
 N-sized data never moves to the driver and never shuffles.
 
-Per harmony round (reference lifecycle R/utils.R:15-46), one of two
-strategies that share every float-producing helper (``run`` picks one
-by partition count; over one partition they are bit-identical):
+Per harmony round (reference lifecycle R/utils.R:15-46): a cold start
+(src/harmony.cpp:214-228) — apply the previous correction, normalize
+-> zn, penalty-free assignment and its O/E/objective partials — then
+ONE round function, ``kernels.run_round``: the max_iter_cluster E-step
+loop (:318-323; ``estep_mode="batch"`` is the full-batch fixed point,
+``"blocked"`` the reference's online update (C3), one block at a time
+through the shared O/E) and the MoE per-combo Gram/RHS sums
+(:561-609). ``run`` picks one of two strategies by partition count;
+they differ only in the partials providers they hand ``run_round``:
   ``_distributed_round`` (several partitions, above FUSE_CELLS cells):
-    cold-start pass (src/harmony.cpp:214-228) — the ONE row-writing job:
-      apply previous correction, normalize -> zn, fused O/E/objective
-      partials (tag rows);
-    x max_iter_cluster E-steps (:318-323) — aggregation-only jobs:
-      * ``estep_mode="batch"``: one job, full-batch fixed point;
-      * ``estep_mode="blocked"``: the reference's online update (C3),
-        one job per block — driver subtracts the block's cached O/E
-        contribution, the job reassigns it against the decremented
-        penalty, the new contribution is added back;
-    moe partials pass (:561-609)  -> per-combo Gram/RHS sums.
-  ``_fused_round`` (single partition): the cold start, the whole E-step
-    loop and the MoE partials as ONE Arrow pass, which emits the cell
-    rows plus one state row holding the round's final O, E, objectives,
-    assignment state and combo sums.
+    the cold start is the one row-writing job (its partials come back
+    as rows with NULL cell_id); each E-step (each block in blocked
+    mode) and the MoE sums are one aggregation-only job.
+  ``_fused_round`` (single partition): the cold start and run_round in
+    ONE Arrow pass over the batches the kernel caches, which emits the
+    cell rows plus one state row holding run_round's result.
+Over one partition the two are bit-identical. Both return the round
+state ({O, E, objectives, r_state, combos}); ``run`` assigns it.
 Then on the driver: C5 support filter (:350-402), λ auto (M8), K ridge
 solves (M6), centroid update (M3) -> W_all for the next round.
 Convergence: window-3 cluster check + harmony check (:173-205), driver
@@ -84,7 +84,6 @@ class HarmonySpark:
         self._init_Y_arg = init_Y
         self.estep_mode = estep_mode
         self._n_blocks_arg = n_blocks
-        self._block_contrib: list[np.ndarray] = []
         self.spark: SparkSession = df.sparkSession
         self.vars_use = list(vars_use)
         self.code_cols = [f"code_{i}" for i in range(len(vars_use))]
@@ -242,162 +241,15 @@ class HarmonySpark:
     # R is never materialized: the current soft assignment is described
     # by `self._r_state` (Y, sigma [, theta, O, E]) and recomputed
     # inside whichever kernel needs it. Per round only the cold-start
-    # pass writes N-sized rows (the zn column); the E-steps are
-    # aggregation-only jobs over the cached zn.
+    # pass writes N-sized rows (the zn column); everything after it is
+    # kernels.run_round over the cached zn, fed by one of two partials
+    # providers.
 
-    def _cold_start_pass(
-        self, source: DataFrame, with_prev_correction: bool, push_objective: bool, round_idx: int
-    ) -> DataFrame:
-        state = {"Y": self.Y, "sigma": self.p.sigma}
-        if with_prev_correction:
-            state["W_all"] = self.W_all
-            state["prev_state"] = self._r_state
-        if self.estep_mode == "blocked":
-            state["nb"] = self.n_blocks
-            state["round_idx"] = round_idx
-        bc = self._broadcast(**state)
-        kernel = kernels.make_cold_start_kernel(
-            bc, self.code_cols, self.p.offsets, self.p.K, self.p.B
-        )
-        # the partials collect filters AFTER the cache layer, so its one
-        # job both fills the round's cache and returns the O/E partials
-        full = self._swap_persist(
-            source.mapInArrow(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
-        )
-        parts = (
-            full.where(F.col("cell_id").isNull())
-            .select("blk", "o", "rlogr", "rdist")
-            .collect()
-        )
-        self._finish_partials(parts, push_objective)
-        # the fresh assignment is penalty-free against the current Y
-        self._r_state = {"Y": self.Y, "sigma": self.p.sigma, "penalty": False}
-        return full.where(F.col("cell_id").isNotNull()).drop("blk", "o", "rlogr", "rdist")
-
-    def _estep_pass(self, cells: DataFrame, round_idx: int) -> None:
-        """One E-step. ``batch`` mode: one aggregation-only job over all
-        cells. ``blocked`` mode (C3, src/harmony.cpp:269-342): the round's
-        cells are split into n_blocks by the arithmetic hash; each block
-        is removed from O/E (driver subtraction of its cached
-        contribution), reassigned against the decremented penalty, and
-        added back — one aggregation job per block, sequential through
-        the shared O/E exactly like the reference's online update.
-        Block membership is fixed within a round (re-randomized across
-        rounds via the round index); the reference reshuffles every
-        E-step — same randomized-block-coordinate-descent family."""
-        if self.estep_mode == "batch":
-            state = {
-                "Y": self.Y,
-                "sigma": self.p.sigma,
-                "theta": self.p.theta,
-                "O": self.O,
-                "E": self.E,
-                "penalty": True,
-            }
-            bc = self._broadcast(**state)
-            kernel = kernels.make_estep_kernel(
-                bc, self.code_cols, self.p.offsets, self.p.K, self.p.B
-            )
-            parts = (
-                cells.select("cell_id", "zn", *self.code_cols)
-                .mapInArrow(kernel, schema=kernels.PARTIAL_SCHEMA)
-                .collect()
-            )
-            self._r_state = state
-            self._finish_partials(parts, push_objective=True)
-            return
-
-        # blocked online mode — the Gauss-Seidel state chain itself lives
-        # in kernels.blocked_estep_chain (shared with the fused round
-        # kernel); this path supplies per-block partials via one Spark
-        # job per block
+    def _round_state(self, round_idx: int) -> dict:
+        """The round state both strategies broadcast: the cold start's
+        inputs and everything ``kernels.run_round`` reads."""
         p = self.p
-        nb = self.n_blocks
-        block_expr = F.pmod(
-            (F.col("cell_id") % kernels.BLOCK_P) * kernels.BLOCK_A
-            + F.lit(round_idx * kernels.BLOCK_B),
-            F.lit(nb),
-        )
-
-        def run_block(i: int, state_i: dict):
-            bc = self._broadcast(**state_i)
-            kernel = kernels.make_estep_kernel(
-                bc, self.code_cols, p.offsets, p.K, p.B
-            )
-            parts = (
-                cells.where(block_expr == i)
-                .select("cell_id", "zn", *self.code_cols)
-                .mapInArrow(kernel, schema=kernels.PARTIAL_SCHEMA)
-                .collect()
-            )
-            (C_new,), rl, rd = kernels.sum_partials(parts, p.K, p.B, 1)
-            return C_new, rl, rd
-
-        O, states, rlogr_tot, rdist_tot = kernels.blocked_estep_chain(
-            self.O, self._block_contrib, self.Y, p.sigma, p.theta,
-            p.Pr_b, p.B_vec[0], nb, run_block,
-        )
-        self.O = O.astype(F32)
-        self.E = kernels.expected_E(O, p.Pr_b, p.B_vec[0]).astype(F32)
-        self._r_state = {
-            "blocked": True,
-            "states": states,
-            "iter": round_idx,
-            "nb": nb,
-        }
-        self.objective_kmeans.append(
-            kernels.km_objective(
-                self.O, self.E, p.sigma, p.theta, rlogr_tot, rdist_tot, p.N
-            )
-        )
-
-    def _kmeans_loop(self, cells: DataFrame, round_idx: int) -> int:
-        """One harmony round's kmeans E-step loop, one job per E-step
-        (per block in blocked mode); returns the number of iterations."""
-        p = self.p
-        iters = 0
-        for it in range(p.max_iter_cluster):
-            self._estep_pass(cells, round_idx)
-            iters = it + 1
-            if it > p.window_size and kernels.km_window_converged(
-                self.objective_kmeans, p.window_size, p.epsilon_cluster
-            ):
-                break
-        return iters
-
-    def _distributed_round(
-        self, source: DataFrame, round_idx: int
-    ) -> tuple[DataFrame, int, dict]:
-        """One harmony round as separate jobs (multi-partition inputs):
-        the cold start pass, the kmeans loop and the MoE partials pass.
-        Returns (cells_with_zn, kmeans_iters, moe_combos)."""
-        cells = self._cold_start_pass(
-            source, with_prev_correction=round_idx > 0,
-            push_objective=round_idx == 0, round_idx=round_idx,
-        )
-        if round_idx == 0:
-            # cells0 (its own z_orig copy) is only a source for init + the
-            # round-0 pass; dropping it now halves the steady-state cache —
-            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
-            # (the cold start's collect filled the round cache, so nothing
-            # recomputes through this lineage.)
-            self.cells0.unpersist()
-        iters = self._kmeans_loop(cells, round_idx)
-        return cells, iters, self._moe_partials(cells)
-
-    def _fused_round(
-        self, source: DataFrame, round_idx: int
-    ) -> tuple[DataFrame, int, dict]:
-        """One WHOLE harmony round as ONE Arrow pass (single-partition
-        inputs only, kernels.make_round_kernel): cold-start correction +
-        re-assignment, the full kmeans E-step loop, and the MoE combo
-        partials — what _distributed_round runs as 3+ jobs (guide §4).
-        The pass's one state row carries the round's final O, E,
-        objectives, assignment state and combos; the driver assigns them
-        as-is.  Returns (cells_with_zn, kmeans_iters, moe_combos)."""
-        p = self.p
-        push_objective = round_idx == 0
-        state = dict(
+        st = dict(
             Y=self.Y,
             sigma=p.sigma,
             theta=p.theta,
@@ -410,15 +262,81 @@ class HarmonySpark:
             N=p.N,
             Pr_b=p.Pr_b,
             B0=p.B_vec[0],
-            push_objective=push_objective,
+            push_objective=round_idx == 0,
         )
+        if round_idx > 0:
+            st["W_all"] = self.W_all
+            st["prev_state"] = self._r_state
+        return st
+
+    def _distributed_round(self, source: DataFrame, round_idx: int) -> tuple[DataFrame, dict]:
+        """One harmony round as separate jobs (multi-partition inputs):
+        the cold-start pass, then ``kernels.run_round`` with one
+        aggregation job per E-step (per block in blocked mode) and one
+        MoE partials job.  Returns (cells_with_zn, round state)."""
+        p = self.p
+        st = self._round_state(round_idx)
+        kernel = kernels.make_cold_start_kernel(
+            self._broadcast(**st), self.code_cols, p.offsets, p.K, p.B
+        )
+        # the partials collect filters AFTER the cache layer, so its one
+        # job both fills the round's cache and returns the O/E partials
+        full = self._swap_persist(
+            source.mapInArrow(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
+        )
+        cold_parts = (
+            full.where(F.col("cell_id").isNull())
+            .select("blk", "o", "rlogr", "rdist")
+            .collect()
+        )
+        if round_idx == 0:
+            # cells0 (its own z_orig copy) is only a source for init + the
+            # round-0 pass; dropping it now halves the steady-state cache —
+            # at 1e9 cells x 64 dims that is ~256 GB of cluster memory back.
+            # (the cold start's collect filled the round cache, so nothing
+            # recomputes through this lineage.)
+            self.cells0.unpersist()
+        cells = full.where(F.col("cell_id").isNotNull()).drop("blk", "o", "rlogr", "rdist")
+        # blocked mode (C3): the round's cells split into n_blocks by the
+        # arithmetic hash, fixed within a round (re-randomized across
+        # rounds via the round index); the reference reshuffles every
+        # E-step — same randomized block-coordinate-descent family
+        block_expr = F.pmod(
+            (F.col("cell_id") % kernels.BLOCK_P) * kernels.BLOCK_A
+            + F.lit(round_idx * kernels.BLOCK_B),
+            F.lit(st["nb"]),
+        )
+
+        def estep_parts(state: dict, block: int | None):
+            kernel = kernels.make_estep_kernel(
+                self._broadcast(**state), self.code_cols, p.offsets, p.K, p.B
+            )
+            src = cells if block is None else cells.where(block_expr == block)
+            return (
+                src.select("cell_id", "zn", *self.code_cols)
+                .mapInArrow(kernel, schema=kernels.PARTIAL_SCHEMA)
+                .collect()
+            )
+
+        state = kernels.run_round(
+            st, cold_parts, estep_parts, lambda rs: self._moe_partials(cells, rs)
+        )
+        return cells, state
+
+    def _fused_round(self, source: DataFrame, round_idx: int) -> tuple[DataFrame, dict]:
+        """One WHOLE harmony round as ONE Arrow pass (single-partition
+        inputs only, kernels.make_round_kernel): the cold start and
+        ``kernels.run_round`` over the batches the kernel caches — what
+        _distributed_round runs as 3+ jobs (guide §4).  The pass's one
+        state row carries the round state.  Returns (cells_with_zn,
+        round state)."""
+        p = self.p
         cols = ["cell_id", "z_orig", *self.code_cols]
         if round_idx > 0:
-            state["W_all"] = self.W_all
-            state["prev_state"] = self._r_state
             cols.append("zn")
         kernel = kernels.make_round_kernel(
-            self._broadcast(**state), self.code_cols, p.offsets, p.K, p.B
+            self._broadcast(**self._round_state(round_idx)),
+            self.code_cols, p.offsets, p.K, p.B,
         )
         full = self._swap_persist(
             source.select(*cols).mapInArrow(
@@ -428,45 +346,25 @@ class HarmonySpark:
         (row,) = full.where(F.col("cell_id").isNull()).select("state").collect()
         if round_idx == 0:
             self.cells0.unpersist()  # as in _distributed_round
-        out = pickle.loads(row["state"])
-        self.O, self.E, self._r_state = out["O"], out["E"], out["r_state"]
-        self.objective_kmeans += out["objectives"]
-        iters = len(out["objectives"]) - push_objective
         cells = full.where(F.col("cell_id").isNotNull()).drop("state")
-        return cells, iters, out["combos"]
+        return cells, pickle.loads(row["state"])
 
-    def _finish_partials(self, parts, push_objective: bool) -> None:
-        """Final reduction of the per-partition partials: O, E (A4/A5)
-        and the objective (A6; cross term contracts to sigma_k theta_b
-        O_kb log((O+E+1)/(2E+1))). push_objective=False for the
-        round>=2 cold start, which in the reference re-estimates O/E
-        without recording an objective (src/harmony.cpp:214-228)."""
+    def _moe_partials(self, cells: DataFrame, r_state: dict) -> dict[tuple, list]:
+        """The MoE combo sums under ``r_state``: one job, its per-partition
+        rows merged with ``kernels.add_combo``."""
         p = self.p
-        nb = self.n_blocks if self.estep_mode == "blocked" else 1
-        self._block_contrib, self.O, self.E, objective = kernels.finish_partials(
-            parts, nb, p.sigma, p.theta, p.Pr_b, p.B_vec[0], p.N
-        )
-        if push_objective:
-            self.objective_kmeans.append(objective)
-
-    def _moe_partials(self, cells: DataFrame) -> dict[tuple, tuple[np.ndarray, np.ndarray]]:
-        p = self.p
-        bc = self._broadcast(**self._r_state)
+        bc = self._broadcast(**r_state)
         kernel = kernels.make_moe_partials_kernel(bc, self.code_cols, p.offsets, p.K, p.d)
         rows = cells.select("cell_id", "z_orig", "zn", *self.code_cols).mapInArrow(
             kernel, schema="combo array<long>, s array<double>, m array<double>"
         ).collect()
         acc: dict[tuple, list] = {}
         for row in rows:
-            combo = tuple(row["combo"])
-            S = np.asarray(row["s"])
-            M = np.asarray(row["m"]).reshape(p.K, p.d)
-            if combo in acc:
-                acc[combo][0] += S
-                acc[combo][1] += M
-            else:
-                acc[combo] = [S, M]
-        return {c: (v[0], v[1]) for c, v in acc.items()}
+            kernels.add_combo(
+                acc, tuple(row["combo"]), np.asarray(row["s"]),
+                np.asarray(row["m"]).reshape(p.K, p.d),
+            )
+        return acc
 
     # ------------------------------------------------------------ driver math
 
@@ -679,11 +577,13 @@ class HarmonySpark:
                 cells = cells.localCheckpoint(eager=True)
                 self._persisted.unpersist()
                 self._persisted = None
-            cells, iters, combos = round_fn(cells, round_idx)
+            cells, state = round_fn(cells, round_idx)
+            self.O, self.E, self._r_state = state["O"], state["E"], state["r_state"]
+            self.objective_kmeans += state["objectives"]
             if round_idx == 0:
                 # the init pass's objective opens the harmony trace
                 self.objective_harmony.append(self.objective_kmeans[0])
-            self.kmeans_rounds.append(iters)
+            self.kmeans_rounds.append(len(state["objectives"]) - (round_idx == 0))
             self.objective_harmony.append(self.objective_kmeans[-1])
             if verbose:
                 # RunHarmony(verbose=TRUE) progress line (R/ui.R:268-272)
@@ -692,7 +592,7 @@ class HarmonySpark:
                     f"objective {self.objective_kmeans[-1]:.4f}",
                     file=sys.stderr,
                 )
-            self._solve_moe(combos)
+            self._solve_moe(state["combos"])
 
             if progress is not None and progress(round_idx, self.objective_kmeans[-1]) is False:
                 break
@@ -1134,5 +1034,4 @@ def load_model(spark: SparkSession, path: str) -> "HarmonySpark":
     m._cells_final = None
     m.cells0 = None  # training cells are not persisted; run() is guarded
     m._persisted = None
-    m._block_contrib = []
     return m

@@ -28,9 +28,11 @@ Kernel map to the reference:
     normalization + penalty-free assignment (:214-228) + fused A4/A6
     partials.
   * estep         — batch-EM diversity E-step, aggregation-only.
-  * round         — single-partition inputs: cold start + the whole
-    E-step loop + MoE partials in one pass, returning the round's final
-    driver state in one row.
+  * run_round     — one round after its cold start: the E-step loop and
+    the MoE partials over caller-supplied partials providers (Spark jobs
+    on the distributed path, in-process passes in the round kernel).
+  * round         — single-partition inputs: cold start + run_round in
+    one pass, returning the round's final driver state in one row.
   * moe partials  — grouped weighted vector sums keyed by the joint
     covariate-level combo (A8/A9: src/harmony.cpp:561-609).
   * correct       — final M2 materialization.
@@ -259,8 +261,8 @@ def sum_partials(parts, K: int, B: int, nb: int):
 def finish_partials(parts, nb: int, sigma, theta, Pr_b, B0: int, N: int):
     """Final reduction of a cold start's or batch E-step's partials
     (A4/A5/A6): returns (per-block float64 O, float32 O, float32 E,
-    objective).  Shared by the driver and the fused round kernel so both
-    strategies see bit-identical floats."""
+    objective).  With ``sum_partials`` the only reduction of partial
+    rows (called from ``run_round``)."""
     per_block, rlogr, rdist = sum_partials(parts, len(sigma), len(Pr_b), nb)
     O = np.sum(per_block, axis=0)
     O_f32 = O.astype(F32)
@@ -287,7 +289,7 @@ def _cold_assign(batch: pa.RecordBatch, st: dict, code_cols, offsets, acc, featu
     zn = _normalize_rows(z)
     dist = 2.0 * (1.0 - zn @ st["Y"])
     R = _soft_assign(dist, st["sigma"])
-    blocks = block_ids(cell_ids, st.get("round_idx", 0), acc.nb) if acc.nb > 1 else None
+    blocks = block_ids(cell_ids, st["round_idx"], acc.nb) if acc.nb > 1 else None
     acc.add(R, dist, gcodes, blocks=blocks)
     return cell_ids, gcodes, zn.astype(F32)
 
@@ -306,7 +308,7 @@ def make_cold_start_kernel(
 
     def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         st = bc.value
-        acc = _PartialAcc(K, B, n_blocks=st.get("nb", 1))  # nb>1: C3 per-block partials
+        acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1: C3 per-block partials
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -329,9 +331,7 @@ def km_objective(
     N: int,
 ) -> float:
     """The kmeans objective (A6) from the POST-update float32 O/E and the
-    pass's float64 partials — one definition shared by the driver
-    bookkeeping and the fused in-kernel chain so both see bit-identical
-    floats."""
+    pass's float64 partials."""
     norm_const = 2000.0 / N
     entropy = float((rlogr * sigma).sum())
     log_term = np.log((O_f32 + E_f32 + 1.0) / (2.0 * E_f32 + 1.0))
@@ -341,12 +341,9 @@ def km_objective(
 
 def km_window_converged(obj: list[float], window: int, eps: float) -> bool:
     """The sliding-window relative-change stop test of the kmeans loop
-    (src/harmony.cpp:173-190) over a plain objective list — ONE
-    definition shared by the distributed loop
-    (``HarmonySpark._kmeans_loop``) and the fused chain kernel
-    (``_run_chain``), so both make the identical stop decision (the
-    first possible check happens after window+2 in-loop objectives, so
-    the pre-loop history is never referenced)."""
+    (src/harmony.cpp:173-190) over the round's E-step objectives, as
+    ``run_round`` calls it (the first check happens after window+2
+    objectives, so the window never reaches before the loop)."""
     obj_old = sum(obj[-2 - i] for i in range(window))
     obj_new = sum(obj[-1 - i] for i in range(window))
     return abs(obj_old - obj_new) / abs(obj_old) < eps
@@ -367,10 +364,8 @@ def blocked_estep_chain(
     src/harmony.cpp:269-342): per block, subtract the cached
     contribution, build the decremented penalty state, obtain the
     block's new partials via ``run_block(i, state_i) -> (C_new, rlogr,
-    rdist)``, add back.  ``block_contrib`` is updated in place.  ONE
-    implementation shared by the distributed per-block-job path and the
-    fused single-pass kernel, so the two execution strategies follow
-    bit-identical float sequences."""
+    rdist)``, add back.  ``block_contrib`` is updated in place.  Called
+    by ``run_round`` once per blocked E-step."""
     O = O_f32.astype(np.float64)
     K = O.shape[0]
     states: list[dict] = []
@@ -397,52 +392,63 @@ def blocked_estep_chain(
     return O, states, rlogr_tot, rdist_tot
 
 
+def add_combo(acc: dict, combo: tuple, S: np.ndarray, M: np.ndarray) -> None:
+    """Merge one combo's MoE partials (S: (K,), M: (K, d)) into ``acc``
+    — the one merge every producer of combo sums uses."""
+    if combo in acc:
+        acc[combo][0] += S
+        acc[combo][1] += M
+    else:
+        acc[combo] = [S, M]
+
+
 def _moe_accumulate(
     acc: dict, z64: np.ndarray, zn: np.ndarray, gcodes: np.ndarray,
     codes: np.ndarray, st: dict, cell_ids: np.ndarray,
 ) -> None:
     """One batch of the MoE per-combo partials (A8 Gram entries S and A9
-    RHS M), accumulated into ``acc``.  ONE implementation shared by the
-    standalone MoE pass and the fused chain kernel so both follow the
-    identical float sequence."""
+    RHS M), accumulated into ``acc``.  Shared by the MoE pass and the
+    round kernel so both follow the identical float sequence."""
     R, _ = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
     R = R.astype(np.float64)
     uniq, inverse = np.unique(codes, axis=0, return_inverse=True)
     for u in range(len(uniq)):
-        combo_t = tuple(int(x) for x in uniq[u])
         ii = np.flatnonzero(inverse == u)
         S = R[ii].sum(axis=0)  # (K,)
         M = R[ii].T @ z64[ii]  # (K, d)
-        if combo_t in acc:
-            acc[combo_t][0] += S
-            acc[combo_t][1] += M
-        else:
-            acc[combo_t] = [S, M]
+        add_combo(acc, tuple(int(x) for x in uniq[u]), S, M)
 
 
-def _run_chain(st: dict, batches: list, K: int, B: int, O_f32, E_f32, contrib):
-    """The WHOLE kmeans E-step loop of one harmony round, in-process —
-    valid exactly when the cells DataFrame has a single partition (then
-    every global reduction the per-iteration driver loop performs is
-    partition-local).  Returns (O_f32, E_f32, objectives, fstate): the
-    loop's final float32 O/E, one kmeans objective per iteration, and
-    the FINAL assignment state — what the distributed loop leaves in
-    the driver's O/E/objective_kmeans/_r_state.
+def run_round(st: dict, cold_parts, estep_parts: Callable, moe_combos: Callable) -> dict:
+    """One harmony round after its cold start: reduce the cold partials,
+    run the kmeans E-step loop (src/harmony.cpp:269-342) and take the
+    MoE combo sums against the loop's final assignment state.  The one
+    round mechanism of both execution strategies; they differ only in
+    the partials providers they pass:
 
-    ``contrib`` (the cold start's float64 per-block O) is updated in
-    place.  State carried here mirrors the driver exactly: float32 O/E
-    between iterations, float64 block contributions, the shared
-    ``blocked_estep_chain`` for the Gauss-Seidel sequence, the shared
-    ``km_objective``/``km_window_converged`` for the stop decision."""
-    mode = st["mode"]
-    nb = st["nb"]
+      * ``cold_parts`` — the cold start's (blk, o, rlogr, rdist) rows;
+      * ``estep_parts(state, block)`` — the partial rows of one E-step
+        pass under the assignment ``state``, over every cell when
+        ``block`` is None, else over the cells of that online block;
+      * ``moe_combos(r_state)`` — ``{combo: [S, M]}`` under ``r_state``.
+
+    ``st`` is the round state ``HarmonySpark._round_state`` builds.
+    Returns ``{O, E, objectives, r_state, combos}``: the loop's final
+    float32 O/E, the objectives (the cold start's first when
+    ``push_objective``, then one per E-step), the final assignment state
+    and the combo sums."""
     Y, sigma, theta = st["Y"], st["sigma"], st["theta"]
-    Pr_b, B0, N = st["Pr_b"], st["B0"], st["N"]
+    Pr_b, B0, N, nb = st["Pr_b"], st["B0"], st["N"], st["nb"]
+    K, B = len(sigma), len(Pr_b)
+    contrib, O_f32, E_f32, cold_obj = finish_partials(
+        cold_parts, nb, sigma, theta, Pr_b, B0, N
+    )
     obj: list[float] = []
-    fstate: dict | None = None
+    # the cold start's assignment: penalty-free against the current Y
+    r_state = {"Y": Y, "sigma": sigma, "penalty": False}
     for itx in range(st["max_iter"]):
-        if mode == "batch":
-            state = {
+        if st["mode"] == "batch":
+            r_state = {
                 "Y": Y,
                 "sigma": sigma,
                 "theta": theta,
@@ -450,30 +456,19 @@ def _run_chain(st: dict, batches: list, K: int, B: int, O_f32, E_f32, contrib):
                 "E": E_f32,
                 "penalty": True,
             }
-            fstate = state
-            acc = _PartialAcc(K, B)
-            for zn, g, _ids in batches:
-                R, dist = _apply_state(zn, g, state)
-                acc.add(R, dist, g)
             _, O_f32, E_f32, objective = finish_partials(
-                acc.partials(), 1, sigma, theta, Pr_b, B0, N
+                estep_parts(r_state, None), 1, sigma, theta, Pr_b, B0, N
             )
         else:
 
             def run_block(i: int, state_i: dict):
-                acc = _PartialAcc(K, B)
-                for zn, g, ids in batches:
-                    blocks = block_ids(ids, st["round_idx"], nb)
-                    m = blocks == i
-                    if m.any():
-                        R, dist = _apply_state(zn[m], g[m], state_i)
-                        acc.add(R, dist, g[m])
-                return acc.O[0], acc.rlogr[0], float(acc.rdist[0])
+                (C_new,), rl, rd = sum_partials(estep_parts(state_i, i), K, B, 1)
+                return C_new, rl, rd
 
             O64, blk_states, rl_tot, rd_tot = blocked_estep_chain(
                 O_f32, contrib, Y, sigma, theta, Pr_b, B0, nb, run_block
             )
-            fstate = {
+            r_state = {
                 "blocked": True,
                 "states": blk_states,
                 "iter": st["round_idx"],
@@ -483,11 +478,15 @@ def _run_chain(st: dict, batches: list, K: int, B: int, O_f32, E_f32, contrib):
             E_f32 = expected_E(O64, Pr_b, B0).astype(F32)
             objective = km_objective(O_f32, E_f32, sigma, theta, rl_tot, rd_tot, N)
         obj.append(objective)
-        if itx > st["window"] and km_window_converged(
-            obj, st["window"], st["eps"]
-        ):
+        if itx > st["window"] and km_window_converged(obj, st["window"], st["eps"]):
             break
-    return O_f32, E_f32, obj, fstate
+    return {
+        "O": O_f32,
+        "E": E_f32,
+        "objectives": [cold_obj] + obj if st["push_objective"] else obj,
+        "r_state": r_state,
+        "combos": moe_combos(r_state),
+    }
 
 
 def make_round_kernel(
@@ -496,20 +495,14 @@ def make_round_kernel(
 ) -> Callable:
     """ONE harmony round as ONE Arrow pass (single-partition inputs
     only): the cold start of every batch (_cold_assign, as in
-    make_cold_start_kernel), the whole kmeans E-step loop (_run_chain),
-    and the MoE per-combo partials against the loop's final state
-    (_moe_accumulate) — what the distributed path runs as 3+ jobs per
-    round is one (guide §4: collapse tiny Python-worker round-trips).
+    make_cold_start_kernel), then ``run_round`` with partials providers
+    that pass over the batches cached in-process — what the distributed
+    path runs as 3+ jobs per round is one (guide §4: collapse tiny
+    Python-worker round-trips).
 
     Emits the N (cell_id, z_orig, codes, zn) rows, whose ``state`` is
     NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
-    pickled dict the driver assigns as-is: ``O``/``E`` (float32, after
-    the loop), ``objectives`` (the init objective first when
-    ``push_objective``, then one per E-step), ``r_state`` (the final
-    assignment state) and ``combos`` ({combo: [S, M]}).  Every float
-    comes from the helpers the distributed path uses (_PartialAcc /
-    finish_partials / blocked_estep_chain / km_objective /
-    _moe_accumulate), so the two strategies stay bit-identical."""
+    pickled ``run_round`` dict the driver assigns as-is."""
 
     schema = _cell_schema(feature_col, code_cols, [("state", pa.binary())])
     passed = ["cell_id", feature_col, *code_cols]
@@ -518,42 +511,40 @@ def make_round_kernel(
         st = bc.value
         acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
         batches: list[tuple] = []
-        moe_batches: list[tuple] = []
         for batch in it:
             if batch.num_rows == 0:
                 continue
             cell_ids, gcodes, zn = _cold_assign(
                 batch, st, code_cols, offsets, acc, feature_col
             )
-            batches.append((zn, gcodes, cell_ids))
-            moe_batches.append(
-                (_matrix(batch, feature_col, np.float64), _codes(batch, code_cols))
+            batches.append(
+                (zn, gcodes, cell_ids,
+                 _matrix(batch, feature_col, np.float64), _codes(batch, code_cols))
             )
             cols = {c: batch.column(c) for c in passed}
             yield _with_nulls(schema, {**cols, "zn": _list_array(zn)})
         if not acc.seen:
             return
 
-        # chain start: the cold partials reduced exactly as the
-        # distributed cold start reduces them driver-side
-        contrib, O_f32, E_f32, cold_obj = finish_partials(
-            acc.partials(), acc.nb, st["sigma"], st["theta"], st["Pr_b"], st["B0"], st["N"]
-        )
-        O_f32, E_f32, objectives, fstate = _run_chain(
-            st, batches, K, B, O_f32, E_f32, contrib
-        )
-        if st["push_objective"]:
-            objectives.insert(0, cold_obj)
-        macc: dict[tuple, list] = {}
-        for (zn_b, g_b, ids_b), (z64_b, codes_b) in zip(batches, moe_batches):
-            _moe_accumulate(macc, z64_b, zn_b, g_b, codes_b, fstate, ids_b)
-        state = {
-            "O": O_f32,
-            "E": E_f32,
-            "objectives": objectives,
-            "r_state": fstate,
-            "combos": macc,
-        }
+        def estep_parts(state: dict, block: int | None):
+            eacc = _PartialAcc(K, B)
+            for zn, g, ids, _, _ in batches:
+                if block is not None:
+                    m = block_ids(ids, st["round_idx"], st["nb"]) == block
+                    if not m.any():
+                        continue
+                    zn, g = zn[m], g[m]
+                R, dist = _apply_state(zn, g, state)
+                eacc.add(R, dist, g)
+            return eacc.partials()
+
+        def moe_combos(r_state: dict) -> dict:
+            macc: dict[tuple, list] = {}
+            for zn, g, ids, z64, codes in batches:
+                _moe_accumulate(macc, z64, zn, g, codes, r_state, ids)
+            return macc
+
+        state = run_round(st, acc.partials(), estep_parts, moe_combos)
         blob = pickle.dumps(state, protocol=pickle.HIGHEST_PROTOCOL)
         yield _with_nulls(schema, {"state": pa.array([blob], pa.binary())})
 

@@ -3,7 +3,8 @@
 Local testing runs on ``local[N]``; the same config block is what we would
 ship to a 1000-executor cluster — AQE on (runtime shuffle-partition
 coalescing + skew-join splitting), Arrow for every pandas-UDF boundary,
-and shuffle partitions sized for the local box (overridable via env).
+and shuffle partitions sized for the local box (one per core unless
+the caller passes ``shuffle_partitions``).
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "harmony-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("HARMONY_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -24,6 +24,17 @@ print('harmony_distributed OK:', d['attempted'], 'checks')"
 echo "== oracle sweep at sf0.01 (the driver's correctness SF) =="
 HARMONY_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_queries.py -q
 
+echo "== vanilla-session probe (tier-1 step 3: no session configs of ours) =="
+python -c "
+from pyspark.sql import SparkSession
+import __spark_entry__ as E
+spark = SparkSession.builder.master('local[8]').getOrCreate()
+n_entry = len(E.entry(spark).collect())
+n_events = len(E.queries()['q337_window_funnel'](spark, '/root/testdata/sf0.01').collect())
+assert n_entry > 0 and n_events > 0, (n_entry, n_events)
+print(f'vanilla session OK: entry {n_entry} rows, q337_window_funnel {n_events} rows')
+spark.stop()"
+
 echo "== bench contract (one JSON line) =="
 python bench.py 2>/dev/null | python -c "
 import json, sys

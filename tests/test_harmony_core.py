@@ -461,6 +461,69 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
                 np.testing.assert_array_equal(fused[key], dist[key], err_msg=f"{mode} {key}")
 
 
+@pytest.mark.parametrize("mode", ["batch", "blocked"])
+def test_distributed_round_over_three_partitions_matches_numpy(
+    spark, spark_fixture_df, monkeypatch, mode
+):
+    """The distributed strategy on 3 real partitions: every E-step and
+    MoE job returns one partial row per partition (per block), and
+    run_round's reductions of those rows must still match the NumPy
+    oracle at the single-partition tests' tolerances."""
+    from pyspark import StorageLevel
+
+    from harmony_spark.core import kernels
+    from harmony_spark.core.algorithm import HarmonySpark
+
+    df, Z, blob, batch = spark_fixture_df
+    blocked = mode == "blocked"
+    nclust, max_iter = (15, 2) if blocked else (20, 3)
+    model = HarmonySpark(
+        df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
+        nclust=nclust, max_iter=max_iter, seed=7, estep_mode=mode,
+        n_blocks=(5 if blocked else None),
+    )
+    one_part = model.cells0
+    model.cells0 = one_part.repartition(3).persist(StorageLevel.MEMORY_AND_DISK)
+    one_part.unpersist()
+    model._cells_nparts = 3
+    assert model.cells0.rdd.getNumPartitions() == 3
+
+    estep_rows, moe_rows = [], []
+    real_round, real_add = kernels.run_round, kernels.add_combo
+
+    def spy_round(st, cold_parts, estep_parts, moe_combos):
+        def counted(state, block):
+            rows = estep_parts(state, block)
+            estep_rows.append(len(rows))
+            return rows
+
+        return real_round(st, cold_parts, counted, moe_combos)
+
+    def spy_add(acc, *args):
+        moe_rows.append(1)
+        return real_add(acc, *args)
+
+    monkeypatch.setattr(kernels, "run_round", spy_round)
+    monkeypatch.setattr(kernels, "add_combo", spy_add)
+    out = model.run().orderBy("cell_id").collect()
+    model.cleanup()
+    Zs = np.stack([r["z_corr"] for r in out])
+    assert estep_rows and min(estep_rows) == 3
+    # one MoE row per (partition, batch level) per round
+    assert len(moe_rows) == 3 * 3 * len(model.kmeans_rounds)
+
+    p = resolve(
+        Z, batch, 3, theta=1.0, nclust=nclust, max_iter=max_iter, seed=7,
+        options=HarmonyOptions(block_size=0.2) if blocked else None,
+    )
+    h = run_harmony_numpy(Z, batch[:, None], p, mode="blocked-hash" if blocked else "batch")
+    np.testing.assert_allclose(
+        np.asarray(model.objective_kmeans), np.asarray(h.objective_kmeans), rtol=2e-3
+    )
+    tol = 3e-3 if blocked else 2e-3
+    np.testing.assert_allclose(Zs, h.Z_corr, rtol=tol, atol=tol)
+
+
 @pytest.mark.parametrize("path", ["fused", "distributed"])
 @pytest.mark.parametrize("bad", ["short", "null"])
 def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
