@@ -15,28 +15,30 @@ ONE round function, ``kernels.run_round``: the max_iter_cluster E-step
 loop (:318-323; ``estep_mode="batch"`` is the full-batch fixed point,
 ``"blocked"`` the reference's online update (C3), one block at a time
 through the shared O/E) and the MoE per-combo Gram/RHS sums
-(:561-609). ``run`` picks one of two strategies by partition count;
-they differ only in the partials providers they hand ``run_round``:
-  ``_distributed_round`` (several partitions, above FUSE_CELLS cells):
-    the cold start is the one row-writing job (its partials come back
-    as rows with NULL cell_id); each E-step (each block in blocked
-    mode) and the MoE sums are one aggregation-only job.
-  ``_fused_round`` (single partition): the cold start and run_round in
-    ONE Arrow pass over the batches the kernel caches, which emits the
-    cell rows plus one state row holding run_round's result.
-Over one partition the two are bit-identical. Both return the round
-state ({O, E, objectives, r_state, combos}); ``run`` assigns it.
-Then on the driver: C5 support filter (:350-402), λ auto (M8), K ridge
-solves (M6), centroid update (M3) -> W_all for the next round.
-Convergence: window-3 cluster check + harmony check (:173-205), driver
-floats. Both E-step modes are pinned to the NumPy cross-oracle
-(numpy_ref.py) by allclose tests; ``run_harmony(mode="blocked-local")``
-additionally offers the literal RNG-shuffled reference semantics for
-single-node-sized data.
+(:561-609). Then the C5 support filter (:350-402), λ auto (M8), K ridge
+solves (M6) and the centroid update (M3) -> W_all for the next round
+(``kernels.solve_moe``), and the harmony stop test (:173-205). That
+loop is ``kernels.run_fit``, the one fit loop of both strategies;
+``run`` picks one by partition count:
+  distributed (several partitions, above FUSE_CELLS cells): run_fit
+    runs on the driver; each round's cold start is the one row-writing
+    job (its partials come back as rows with NULL cell_id), each E-step
+    (each block in blocked mode) and the MoE sums are one
+    aggregation-only job, and the final correction is one more pass.
+  fused (single partition, ``_fused_fit``): run_fit runs inside ONE
+    Arrow pass over the batches the kernel caches — every round plus
+    the final correction — which emits the corrected cell rows plus one
+    state row holding run_fit's result. The whole fit is one Spark job.
+Over one partition the two are bit-identical; ``run`` assigns the
+run_fit result in one place. Both E-step modes are pinned to the NumPy
+cross-oracle (numpy_ref.py) by allclose tests;
+``run_harmony(mode="blocked-local")`` additionally offers the literal
+RNG-shuffled reference semantics for single-node-sized data.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import pickle
 import sys
 
@@ -162,22 +164,27 @@ class HarmonySpark:
         # tasks/pass on a cluster, at N=500 it is one.
         target_parts = max(1, min(self.spark.sparkContext.defaultParallelism, -(-N // 10_000)))
         # at or below FUSE_CELLS, collapse to ONE partition: run() then
-        # takes _fused_round, one Arrow pass per round, instead of
+        # takes _fused_fit, the whole fit as one Arrow pass, instead of
         # _distributed_round's one job per iteration — at 32k cells the
         # per-job scheduler floor costs far more than the lost map
         # parallelism (a 64k-cell task is a few tens of MB / tens of ms
         # of vectorized numpy, guide §2.2: fewer, larger partitions; §4:
-        # collapse tiny Python-worker round-trips). At 1e9 cells this
-        # branch never fires. repartition/mapInArrow/localCheckpoint
-        # all preserve the partition count across rounds.
+        # collapse tiny Python-worker round-trips). The collapse is a
+        # coalesce, not a shuffle: with no exchange under the cache, AQE
+        # fills it inside its first consumer's job, instead of running
+        # the shuffle map stage and the cache fill as jobs of their own.
+        # At 1e9 cells this branch never fires. repartition/mapInArrow/
+        # localCheckpoint all preserve the partition count across rounds.
         if N <= FUSE_CELLS:
             target_parts = 1
+            cells = cells.coalesce(1)
+        else:
+            cells = cells.repartition(target_parts)
         self._cells_nparts = target_parts
-        cells = cells.repartition(target_parts)
         # LAZY persist: every first consumer (the init sample collect /
-        # mllib fit / round-0 pass) is a single-scan stage, so its one
-        # job fills the cache — the former eager count() was a whole
-        # extra pass (guide §1.2)
+        # mllib fit / fused fit pass / round-0 cold start) is a
+        # single-scan stage, so its one job fills the cache — the former
+        # eager count() was a whole extra pass (guide §1.2)
         self.cells0 = cells.persist(StorageLevel.MEMORY_AND_DISK)
         self._persisted: DataFrame | None = None
 
@@ -213,10 +220,10 @@ class HarmonySpark:
         return self.spark.sparkContext.broadcast(arrays)
 
     def _swap_persist(self, df: DataFrame) -> DataFrame:
-        """Persist a round's row-writing pass as the round cache.  No
-        eager count: the caller's next action (the filtered collect of
-        the pass's non-cell rows) scans every partition, so the cache
-        fills as a by-product."""
+        """Persist a round's (or the fused fit's) row-writing pass as
+        the cache.  No eager count: the caller's next action (the
+        filtered collect of the pass's non-cell rows) scans every
+        partition, so the cache fills as a by-product."""
         # Deferred fill is only safe from a cold start: if _persisted
         # held an ancestor of df, retiring it before the filling action
         # would force that action to recompute the whole lineage.
@@ -227,63 +234,34 @@ class HarmonySpark:
         self._persisted = df
         return df
 
-    def _pass_schema(self, extra: str) -> str:
-        """Schema of a row-writing pass: the cell columns, then the
-        ``extra`` columns its non-cell rows (NULL cell_id) carry."""
-        codes = ", ".join(f"{c} int" for c in self.code_cols)
-        return (
-            f"cell_id long, z_orig array<{SPARK_SCALAR}>, {codes}, "
-            f"zn array<{SPARK_SCALAR}>, {extra}"
-        )
-
     # ------------------------------------------------------------ passes
     #
     # R is never materialized: the current soft assignment is described
     # by `self._r_state` (Y, sigma [, theta, O, E]) and recomputed
-    # inside whichever kernel needs it. Per round only the cold-start
-    # pass writes N-sized rows (the zn column); everything after it is
-    # kernels.run_round over the cached zn, fed by one of two partials
-    # providers.
+    # inside whichever kernel needs it. Both strategies run the fit loop
+    # kernels.run_fit. Distributed, each round's cold-start pass writes
+    # the N-sized zn column and kernels.run_round runs over the cached
+    # zn as Spark jobs; fused, the whole fit is one pass.
 
-    def _round_state(self, round_idx: int) -> dict:
-        """The round state both strategies broadcast: the cold start's
-        inputs and everything ``kernels.run_round`` reads."""
+    def _distributed_round(self, source: DataFrame, st: dict) -> tuple[DataFrame, dict]:
+        """One harmony round as separate jobs (multi-partition inputs),
+        for the round state ``st`` that ``kernels.run_fit`` builds: the
+        cold-start pass, then ``kernels.run_round`` with one aggregation
+        job per E-step (per block in blocked mode) and one MoE partials
+        job.  Returns (cells_with_zn, round state)."""
         p = self.p
-        st = dict(
-            Y=self.Y,
-            sigma=p.sigma,
-            theta=p.theta,
-            mode=self.estep_mode,
-            nb=self.n_blocks if self.estep_mode == "blocked" else 1,
-            round_idx=round_idx,
-            max_iter=p.max_iter_cluster,
-            window=p.window_size,
-            eps=p.epsilon_cluster,
-            N=p.N,
-            Pr_b=p.Pr_b,
-            B0=p.B_vec[0],
-            push_objective=round_idx == 0,
-        )
-        if round_idx > 0:
-            st["W_all"] = self.W_all
-            st["prev_state"] = self._r_state
-        return st
-
-    def _distributed_round(self, source: DataFrame, round_idx: int) -> tuple[DataFrame, dict]:
-        """One harmony round as separate jobs (multi-partition inputs):
-        the cold-start pass, then ``kernels.run_round`` with one
-        aggregation job per E-step (per block in blocked mode) and one
-        MoE partials job.  Returns (cells_with_zn, round state)."""
-        p = self.p
-        st = self._round_state(round_idx)
+        round_idx = st["round_idx"]
         kernel = kernels.make_cold_start_kernel(
             self._broadcast(**st), self.code_cols, p.offsets, p.K, p.B
         )
         # the partials collect filters AFTER the cache layer, so its one
         # job both fills the round's cache and returns the O/E partials
-        full = self._swap_persist(
-            source.mapInArrow(kernel, schema=self._pass_schema(kernels.PARTIAL_SCHEMA))
+        codes = ", ".join(f"{c} int" for c in self.code_cols)
+        schema = (
+            f"cell_id long, z_orig array<{SPARK_SCALAR}>, {codes}, "
+            f"zn array<{SPARK_SCALAR}>, {kernels.PARTIAL_SCHEMA}"
         )
+        full = self._swap_persist(source.mapInArrow(kernel, schema=schema))
         cold_parts = (
             full.where(F.col("cell_id").isNull())
             .select("blk", "o", "rlogr", "rdist")
@@ -323,29 +301,26 @@ class HarmonySpark:
         )
         return cells, state
 
-    def _fused_round(self, source: DataFrame, round_idx: int) -> tuple[DataFrame, dict]:
-        """One WHOLE harmony round as ONE Arrow pass (single-partition
-        inputs only, kernels.make_round_kernel): the cold start and
-        ``kernels.run_round`` over the batches the kernel caches — what
-        _distributed_round runs as 3+ jobs (guide §4).  The pass's one
-        state row carries the round state.  Returns (cells_with_zn,
-        round state)."""
-        p = self.p
-        cols = ["cell_id", "z_orig", *self.code_cols]
-        if round_idx > 0:
-            cols.append("zn")
-        kernel = kernels.make_round_kernel(
-            self._broadcast(**self._round_state(round_idx)),
+    def _fused_fit(self, p: ResolvedParams, nb: int) -> tuple[DataFrame, dict]:
+        """The WHOLE fit under params ``p`` (``nb`` E-step blocks) as
+        ONE Arrow pass (single-partition inputs only,
+        kernels.make_fit_kernel): every round and the final correction
+        over the batches the kernel caches.  The pass is persisted and
+        its one state row collected, so that one job fills the cache.
+        Returns (cells with zn and z_corr, ``kernels.run_fit`` result)."""
+        kernel = kernels.make_fit_kernel(
+            self._broadcast(p=p, Y=self.Y, mode=self.estep_mode, nb=nb),
             self.code_cols, p.offsets, p.K, p.B,
         )
+        codes = ", ".join(f"{c} int" for c in self.code_cols)
         full = self._swap_persist(
-            source.select(*cols).mapInArrow(
-                kernel, schema=self._pass_schema("state binary")
+            self.cells0.mapInArrow(
+                kernel,
+                schema=f"cell_id long, {codes}, zn array<{SPARK_SCALAR}>, "
+                f"z_corr array<{SPARK_SCALAR}>, state binary",
             )
         )
         (row,) = full.where(F.col("cell_id").isNull()).select("state").collect()
-        if round_idx == 0:
-            self.cells0.unpersist()  # as in _distributed_round
         cells = full.where(F.col("cell_id").isNotNull()).drop("state")
         return cells, pickle.loads(row["state"])
 
@@ -418,196 +393,100 @@ class HarmonySpark:
             Yn = Y / np.maximum(np.linalg.norm(Y, axis=1, keepdims=True), 1e-12)
             self.Y = Yn.T.copy()
             return
-        if p.N <= _INIT_SAMPLE_CAP:
-            sample = self.cells0.select("cell_id", "z_orig").orderBy("cell_id")
-        else:
-            sample = (
-                self.cells0.select("cell_id", "z_orig")
-                .orderBy(F.xxhash64("cell_id"))
-                .limit(_INIT_SAMPLE_CAP)
-                .orderBy("cell_id")
-            )
-        Z = kernels._matrix(sample.toArrow(), "z_orig")
+        sample = self.cells0.select("cell_id", "z_orig")
+        if p.N > _INIT_SAMPLE_CAP:
+            sample = sample.orderBy(F.xxhash64("cell_id")).limit(_INIT_SAMPLE_CAP)
+        # the seeding sees the sample in cell_id order; the driver holds
+        # the sample anyway, so it sorts it instead of Spark
+        Z = kernels._matrix(sample.toArrow().sort_by("cell_id"), "z_orig")
         Zn = Z / np.maximum(np.linalg.norm(Z, axis=1, keepdims=True), 1e-12)
         self.Y = kmeans_centers(Zn, p.K, p.seed)  # (d, K), L2-normalized cols
 
-    @staticmethod
-    def _arrowhead_solve(G: np.ndarray, rhs: np.ndarray) -> np.ndarray:
-        """M7: closed-form solve of the single-covariate MoE system
-        (/root/reference/src/harmony.cpp:572-586 computes this inverse).
-
-        With one covariate every design row is [1, e_b], so the ridge
-        Gram is an ARROWHEAD matrix [[a, c^T], [c, D]] (D diagonal:
-        per-level soft counts + lambda; c: the same counts; a: total
-        mass). Schur complement on the (0,0) entry gives
-
-            inv(G) = v v^T / s + diag([0, 1/D])   with
-            v = [1, -c/D],  s = a - sum(c^2 / D)
-
-        so the solve is O(B*d) instead of O(B^3): irrelevant at B=5,
-        decisive when a run has thousands of batch levels (sample-level
-        covariates), where the K dense inversions would start to rival
-        the E-step. Raises LinAlgError on a degenerate pivot so the
-        caller's no-support skip path handles it like the dense solver.
-        """
-        a, c, d = G[0, 0], G[0, 1:], G.diagonal()[1:].copy()
-        if np.any(d <= 0):
-            raise np.linalg.LinAlgError("non-positive arrowhead diagonal")
-        dinv = 1.0 / d
-        s = a - np.sum(c * c * dinv)
-        if not np.isfinite(s) or s <= 0:
-            raise np.linalg.LinAlgError("non-positive Schur complement")
-        v = np.concatenate([[1.0], -c * dinv])
-        W = np.outer(v, v @ rhs) / s
-        W[1:] += dinv[:, None] * rhs[1:]
-        return W
-
-    def _solve_moe(self, combos: dict[tuple, tuple[np.ndarray, np.ndarray]]) -> None:
-        """C5 filter + M8 auto-lambda + M6 ridge solves + M3 centroid
-        update, all driver-side from the tiny combo partials."""
-        p = self.p
-        C = len(p.B_vec)
-        combo_keys = list(combos.keys())
-        S_mat = np.stack([combos[c][0] for c in combo_keys])  # (T, K)
-        M_mat = np.stack([combos[c][1] for c in combo_keys])  # (T, K, d)
-        # global level indices per combo
-        combo_levels = np.stack(
-            [[combo[c] + p.offsets[c] for c in range(C)] for combo in combo_keys]
-        )  # (T, C)
-
-        W_all = np.zeros((p.K, p.B, p.d), dtype=np.float64)
-        Y_new = self.Y.copy()
-
-        for k in range(p.K):
-            avg_R = self.O[k].astype(np.float64) / p.N_b
-            qualifies = avg_R > p.batch_prop_cutoff
-            keep = np.zeros(p.B, dtype=bool)
-            active_covariates = 0
-            for c in range(C):
-                lo, hi = p.offsets[c], p.offsets[c] + p.B_vec[c]
-                nq = int(qualifies[lo:hi].sum())
-                if nq > 1:
-                    keep[lo:hi] = qualifies[lo:hi]
-                    active_covariates += 1
-            if keep.sum() < p.B and active_covariates == 0:
-                continue  # cluster skipped (src/harmony.cpp:452-455)
-
-            kept_levels = np.flatnonzero(keep)
-            pos = {b: j + 1 for j, b in enumerate(kept_levels)}
-            m = len(kept_levels)
-            # combo -> design vector u (intercept + kept levels)
-            T = len(combo_keys)
-            U = np.zeros((T, m + 1))
-            combo_kept = np.zeros(T, dtype=bool)
-            for t in range(T):
-                lv = combo_levels[t]
-                has = [b for b in lv if keep[b]]
-                if has:
-                    combo_kept[t] = True
-                    U[t, 0] = 1.0
-                    for b in has:
-                        U[t, pos[b]] = 1.0
-            if not combo_kept.any():
-                continue
-            Uk = U[combo_kept]
-            Sk = S_mat[combo_kept, k]  # (T',)
-            Mk = M_mat[combo_kept, k, :]  # (T', d)
-            Gram = (Uk * Sk[:, None]).T @ Uk  # (m+1, m+1)
-            if p.lamb is None:
-                lam = np.concatenate(
-                    [[0.0], p.alpha * self.E[k].astype(np.float64)[kept_levels]]
-                )
-            else:
-                lam = np.concatenate([[0.0], p.lamb[1:][kept_levels]])
-            Gram[np.diag_indices(m + 1)] += lam
-            rhs = Uk.T @ Mk  # (m+1, d)
-            try:
-                if C == 1:
-                    # single covariate -> arrowhead Gram, closed form (M7)
-                    W = self._arrowhead_solve(Gram, rhs)
-                else:
-                    # multi-covariate designs have cross-covariate Gram
-                    # terms (not arrowhead) — dense solve, like the
-                    # reference's B_vec.size()>1 arma::inv branch
-                    W = np.linalg.solve(Gram, rhs)
-            except np.linalg.LinAlgError:
-                # vanishing cluster mass (intercept row has lambda=0);
-                # skip the cluster like the C5 no-support path
-                continue
-            Y_new[:, k] = W[0].astype(F32)
-            for b in kept_levels:
-                W_all[k, b] = W[pos[b]]
-
-        norms = np.maximum(np.linalg.norm(Y_new, axis=0, keepdims=True), 1e-12)
-        self.Y = (Y_new / norms).astype(F32)
-        self.W_all = W_all.astype(F32)
-
     # ------------------------------------------------------------ lifecycle
-
-    def _harmony_converged(self) -> bool:
-        o = self.objective_harmony
-        return (o[-2] - o[-1]) / abs(o[-2]) < self.p.epsilon_harmony
 
     def run(self, verbose: bool = False, progress=None) -> DataFrame:
         """``progress``, if given, is called after every harmony round as
         ``progress(round_idx, objective) -> bool | None``; returning
-        ``False`` aborts the loop cooperatively (the model keeps the
+        ``False`` aborts the fit cooperatively (the model keeps the
         rounds completed so far and still emits a corrected embedding) —
         the C6 progress/abort surface (the reference's progress bar +
         interrupt, R/ui.R:268-272, re-expressed as a callback since a
-        driver script has no TTY)."""
+        driver script has no TTY).
+
+        The callback runs live, between rounds, only above the fuse
+        gate.  At or below it the whole fit is one Arrow pass, so the
+        calls are replayed in order after the pass; an abort at round r
+        of a fit that ran further reruns the pass with ``max_iter=r+1``
+        (without calling ``progress`` again), which leaves the model a
+        fit that stopped after round r."""
         if getattr(self, "cells0", None) is None:
             raise RuntimeError(
                 "this model has no training cells (loaded via load_model?) — "
                 "it supports transform()/assign()/get_Y(), not re-run()"
             )
         p = self.p
+        nb = self.n_blocks if self.estep_mode == "blocked" else 1
         self._init_Y()
-        # single-partition inputs run each round as ONE Arrow pass
-        round_fn = self._fused_round if self._cells_nparts == 1 else self._distributed_round
-        cells = self.cells0
-        for round_idx in range(p.max_iter):
-            if round_idx > 0:
-                # truncate lineage between rounds. localCheckpoint already
-                # stores the partitions (MEMORY_AND_DISK) — persisting on
-                # top would hold a SECOND full copy, so track the
-                # checkpoint directly; the checkpoint blocks are released
-                # by the ContextCleaner once this round's pass
-                # materializes and drops the reference.
-                cells = cells.localCheckpoint(eager=True)
-                self._persisted.unpersist()
-                self._persisted = None
-            cells, state = round_fn(cells, round_idx)
-            self.O, self.E, self._r_state = state["O"], state["E"], state["r_state"]
-            self.objective_kmeans += state["objectives"]
-            if round_idx == 0:
-                # the init pass's objective opens the harmony trace
-                self.objective_harmony.append(self.objective_kmeans[0])
-            self.kmeans_rounds.append(len(state["objectives"]) - (round_idx == 0))
-            self.objective_harmony.append(self.objective_kmeans[-1])
+
+        def report(round_idx: int, objective: float):
             if verbose:
                 # RunHarmony(verbose=TRUE) progress line (R/ui.R:268-272)
                 print(
-                    f"Harmony {round_idx + 1}/{p.max_iter}: "
-                    f"objective {self.objective_kmeans[-1]:.4f}",
+                    f"Harmony {round_idx + 1}/{p.max_iter}: objective {objective:.4f}",
                     file=sys.stderr,
                 )
-            self._solve_moe(state["combos"])
+            if progress is not None:
+                return progress(round_idx, objective)
 
-            if progress is not None and progress(round_idx, self.objective_kmeans[-1]) is False:
-                break
-            if self._harmony_converged():
-                break
+        if self._cells_nparts == 1:
+            # single-partition inputs run the whole fit as ONE Arrow pass
+            cells, fit = self._fused_fit(p, nb)
+            round_objs = fit["objective_harmony"][1:]
+            for round_idx, objective in enumerate(round_objs):
+                if report(round_idx, objective) is False:
+                    if round_idx + 1 < len(round_objs):
+                        self._persisted.unpersist()
+                        self._persisted = None
+                        cells, fit = self._fused_fit(
+                            dataclasses.replace(p, max_iter=round_idx + 1), nb
+                        )
+                    break
+            self.cells0.unpersist()
+        else:
+            cells = self.cells0
 
-        # final correction materialization (M2)
+            def round_fn(st: dict) -> dict:
+                nonlocal cells
+                if st["round_idx"] > 0:
+                    # truncate lineage between rounds. localCheckpoint
+                    # already stores the partitions (MEMORY_AND_DISK) —
+                    # persisting on top would hold a SECOND full copy, so
+                    # track the checkpoint directly; the checkpoint blocks
+                    # are released by the ContextCleaner once this round's
+                    # pass materializes and drops the reference.
+                    cells = cells.localCheckpoint(eager=True)
+                    self._persisted.unpersist()
+                    self._persisted = None
+                cells, state = self._distributed_round(cells, st)
+                return state
+
+            fit = kernels.run_fit(p, self.Y, self.estep_mode, nb, round_fn, on_round=report)
+
+        self.Y, self.W_all, self.O, self.E = fit["Y"], fit["W_all"], fit["O"], fit["E"]
+        self._r_state = fit["r_state"]
+        self.objective_kmeans = fit["objective_kmeans"]
+        self.objective_harmony = fit["objective_harmony"]
+        self.kmeans_rounds = fit["kmeans_rounds"]
         self._cells_final = cells
+        if self._cells_nparts == 1:
+            return cells.select("cell_id", *self.code_cols, "z_corr")
+        # final correction materialization (M2)
         bc = self._broadcast(W_all=self.W_all, r_state=self._r_state)
         kernel = kernels.make_correct_kernel(bc, self.code_cols, p.offsets)
         codes = ", ".join(f"{c} int" for c in self.code_cols)
-        result = cells.mapInArrow(
+        return cells.mapInArrow(
             kernel, schema=f"cell_id long, {codes}, z_corr array<{SPARK_SCALAR}>"
         )
-        return result
 
     def transform(self, df: DataFrame, features_col: str = "features", id_col: str = "cell_id") -> DataFrame:
         """Fold NEW cells into the fitted model (extension — the
@@ -929,7 +808,6 @@ def save_model(model: "HarmonySpark", path: str) -> None:
     cluster. Blocked-mode runs store the flattened last-block penalty
     state — exactly what transform() uses for new cells.
     """
-    import dataclasses
     import json
     import os
 

@@ -30,9 +30,13 @@ Kernel map to the reference:
   * estep         — batch-EM diversity E-step, aggregation-only.
   * run_round     — one round after its cold start: the E-step loop and
     the MoE partials over caller-supplied partials providers (Spark jobs
-    on the distributed path, in-process passes in the round kernel).
-  * round         — single-partition inputs: cold start + run_round in
-    one pass, returning the round's final driver state in one row.
+    on the distributed path, in-process passes in the fit kernel).
+  * solve_moe     — C5 filter, M8 auto-lambda, M6 ridge solves (M7
+    arrowhead closed form for one covariate) and the M3 centroid update.
+  * run_fit       — the fit loop: cold start + run_round, solve_moe and
+    the harmony stop test per round, for both strategies.
+  * fit           — single-partition inputs: run_fit and the final
+    correction in one pass, returning the fit's driver state in one row.
   * moe partials  — grouped weighted vector sums keyed by the joint
     covariate-level combo (A8/A9: src/harmony.cpp:561-609).
   * correct       — final M2 materialization.
@@ -272,18 +276,14 @@ def finish_partials(parts, nb: int, sigma, theta, Pr_b, B0: int, N: int):
     )
 
 
-def _cold_assign(batch: pa.RecordBatch, st: dict, code_cols, offsets, acc, feature_col: str):
-    """Cold start of one Arrow batch: apply the previous round's
-    correction (recomputing the previous R from ``prev_state``),
-    L2-normalize, assign penalty-free against Y and add the A4/A6
-    partials to ``acc`` (per online block when it has several).
-    Returns (cell_ids, gcodes, zn)."""
-    cell_ids = batch.column("cell_id").to_numpy()
-    z = _matrix(batch, feature_col)
-    gcodes = _codes(batch, code_cols, offsets)
+def _cold_assign(cell_ids, z, gcodes, zn_prev, st: dict, acc) -> np.ndarray:
+    """Cold start of one batch of cells: apply the previous round's
+    correction (recomputing the previous R of ``zn_prev`` from
+    ``prev_state``; ``zn_prev`` is None at init), L2-normalize, assign
+    penalty-free against Y and add the A4/A6 partials to ``acc`` (per
+    online block when it has several).  Returns zn."""
     W_all = st.get("W_all")  # None at init
     if W_all is not None:
-        zn_prev = _matrix(batch, "zn")
         R_prev, _ = recompute_R(zn_prev, gcodes, st["prev_state"], cell_ids=cell_ids)
         z = _correction(z, R_prev, gcodes, W_all)
     zn = _normalize_rows(z)
@@ -291,7 +291,7 @@ def _cold_assign(batch: pa.RecordBatch, st: dict, code_cols, offsets, acc, featu
     R = _soft_assign(dist, st["sigma"])
     blocks = block_ids(cell_ids, st["round_idx"], acc.nb) if acc.nb > 1 else None
     acc.add(R, dist, gcodes, blocks=blocks)
-    return cell_ids, gcodes, zn.astype(F32)
+    return zn.astype(F32)
 
 
 def make_cold_start_kernel(
@@ -312,7 +312,11 @@ def make_cold_start_kernel(
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            _, _, zn = _cold_assign(batch, st, code_cols, offsets, acc, feature_col)
+            zn_prev = _matrix(batch, "zn") if st.get("W_all") is not None else None
+            zn = _cold_assign(
+                batch.column("cell_id").to_numpy(), _matrix(batch, feature_col),
+                _codes(batch, code_cols, offsets), zn_prev, st, acc,
+            )
             cols = {c: batch.column(c) for c in passed}
             yield _with_nulls(schema, {**cols, "zn": _list_array(zn)})
         if acc.seen:
@@ -408,7 +412,7 @@ def _moe_accumulate(
 ) -> None:
     """One batch of the MoE per-combo partials (A8 Gram entries S and A9
     RHS M), accumulated into ``acc``.  Shared by the MoE pass and the
-    round kernel so both follow the identical float sequence."""
+    fit kernel so both follow the identical float sequence."""
     R, _ = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
     R = R.astype(np.float64)
     uniq, inverse = np.unique(codes, axis=0, return_inverse=True)
@@ -432,7 +436,7 @@ def run_round(st: dict, cold_parts, estep_parts: Callable, moe_combos: Callable)
         ``block`` is None, else over the cells of that online block;
       * ``moe_combos(r_state)`` — ``{combo: [S, M]}`` under ``r_state``.
 
-    ``st`` is the round state ``HarmonySpark._round_state`` builds.
+    ``st`` is the round state ``run_fit`` builds.
     Returns ``{O, E, objectives, r_state, combos}``: the loop's final
     float32 O/E, the objectives (the cold start's first when
     ``push_objective``, then one per E-step), the final assignment state
@@ -489,63 +493,258 @@ def run_round(st: dict, cold_parts, estep_parts: Callable, moe_combos: Callable)
     }
 
 
-def make_round_kernel(
+def arrowhead_solve(G: np.ndarray, rhs: np.ndarray) -> np.ndarray:
+    """M7: closed-form solve of the single-covariate MoE system
+    (src/harmony.cpp:572-586 computes this inverse).
+
+    With one covariate every design row is [1, e_b], so the ridge
+    Gram is an ARROWHEAD matrix [[a, c^T], [c, D]] (D diagonal:
+    per-level soft counts + lambda; c: the same counts; a: total
+    mass). Schur complement on the (0,0) entry gives
+
+        inv(G) = v v^T / s + diag([0, 1/D])   with
+        v = [1, -c/D],  s = a - sum(c^2 / D)
+
+    so the solve is O(B*d) instead of O(B^3): irrelevant at B=5,
+    decisive when a run has thousands of batch levels (sample-level
+    covariates), where the K dense inversions would start to rival
+    the E-step. Raises LinAlgError on a degenerate pivot so the
+    caller's no-support skip path handles it like the dense solver.
+    """
+    a, c, d = G[0, 0], G[0, 1:], G.diagonal()[1:].copy()
+    if np.any(d <= 0):
+        raise np.linalg.LinAlgError("non-positive arrowhead diagonal")
+    dinv = 1.0 / d
+    s = a - np.sum(c * c * dinv)
+    if not np.isfinite(s) or s <= 0:
+        raise np.linalg.LinAlgError("non-positive Schur complement")
+    v = np.concatenate([[1.0], -c * dinv])
+    W = np.outer(v, v @ rhs) / s
+    W[1:] += dinv[:, None] * rhs[1:]
+    return W
+
+
+def solve_moe(p, O, E, Y, combos: dict[tuple, tuple[np.ndarray, np.ndarray]]):
+    """C5 filter + M8 auto-lambda + M6 ridge solves + M3 centroid
+    update from the tiny combo partials, under the resolved params
+    ``p`` and the round's float32 O/E.  Returns the new (Y, W_all)."""
+    C = len(p.B_vec)
+    combo_keys = list(combos.keys())
+    S_mat = np.stack([combos[c][0] for c in combo_keys])  # (T, K)
+    M_mat = np.stack([combos[c][1] for c in combo_keys])  # (T, K, d)
+    # global level indices per combo
+    combo_levels = np.stack(
+        [[combo[c] + p.offsets[c] for c in range(C)] for combo in combo_keys]
+    )  # (T, C)
+
+    W_all = np.zeros((p.K, p.B, p.d), dtype=np.float64)
+    Y_new = Y.copy()
+
+    for k in range(p.K):
+        avg_R = O[k].astype(np.float64) / p.N_b
+        qualifies = avg_R > p.batch_prop_cutoff
+        keep = np.zeros(p.B, dtype=bool)
+        active_covariates = 0
+        for c in range(C):
+            lo, hi = p.offsets[c], p.offsets[c] + p.B_vec[c]
+            nq = int(qualifies[lo:hi].sum())
+            if nq > 1:
+                keep[lo:hi] = qualifies[lo:hi]
+                active_covariates += 1
+        if keep.sum() < p.B and active_covariates == 0:
+            continue  # cluster skipped (src/harmony.cpp:452-455)
+
+        kept_levels = np.flatnonzero(keep)
+        pos = {b: j + 1 for j, b in enumerate(kept_levels)}
+        m = len(kept_levels)
+        # combo -> design vector u (intercept + kept levels)
+        T = len(combo_keys)
+        U = np.zeros((T, m + 1))
+        combo_kept = np.zeros(T, dtype=bool)
+        for t in range(T):
+            lv = combo_levels[t]
+            has = [b for b in lv if keep[b]]
+            if has:
+                combo_kept[t] = True
+                U[t, 0] = 1.0
+                for b in has:
+                    U[t, pos[b]] = 1.0
+        if not combo_kept.any():
+            continue
+        Uk = U[combo_kept]
+        Sk = S_mat[combo_kept, k]  # (T',)
+        Mk = M_mat[combo_kept, k, :]  # (T', d)
+        Gram = (Uk * Sk[:, None]).T @ Uk  # (m+1, m+1)
+        if p.lamb is None:
+            lam = np.concatenate(
+                [[0.0], p.alpha * E[k].astype(np.float64)[kept_levels]]
+            )
+        else:
+            lam = np.concatenate([[0.0], p.lamb[1:][kept_levels]])
+        Gram[np.diag_indices(m + 1)] += lam
+        rhs = Uk.T @ Mk  # (m+1, d)
+        try:
+            if C == 1:
+                # single covariate -> arrowhead Gram, closed form (M7)
+                W = arrowhead_solve(Gram, rhs)
+            else:
+                # multi-covariate designs have cross-covariate Gram
+                # terms (not arrowhead) — dense solve, like the
+                # reference's B_vec.size()>1 arma::inv branch
+                W = np.linalg.solve(Gram, rhs)
+        except np.linalg.LinAlgError:
+            # vanishing cluster mass (intercept row has lambda=0);
+            # skip the cluster like the C5 no-support path
+            continue
+        Y_new[:, k] = W[0].astype(F32)
+        for b in kept_levels:
+            W_all[k, b] = W[pos[b]]
+
+    norms = np.maximum(np.linalg.norm(Y_new, axis=0, keepdims=True), 1e-12)
+    return (Y_new / norms).astype(F32), W_all.astype(F32)
+
+
+def harmony_converged(objective_harmony: list[float], eps: float) -> bool:
+    """The harmony-level stop test (src/harmony.cpp:192-205): relative
+    change of the last two round objectives below ``eps``."""
+    o = objective_harmony
+    return (o[-2] - o[-1]) / abs(o[-2]) < eps
+
+
+def run_fit(p, Y: np.ndarray, mode: str, nb: int, round_fn: Callable, on_round=None) -> dict:
+    """The harmony fit loop (R/utils.R:15-46), the one loop of both
+    execution strategies.  Per round: build the round state, run
+    ``round_fn(st)`` (the cold start plus ``run_round``, returning its
+    dict), keep the objective traces, solve the MoE (``solve_moe``),
+    report ``on_round(round_idx, objective)`` — returning False stops
+    the fit — and apply the harmony stop test.
+
+    ``p`` is the ResolvedParams, ``Y`` the initial centroids, ``mode``
+    the E-step mode and ``nb`` its block count (1 in batch mode).
+    Returns ``{Y, W_all, O, E, r_state, objective_kmeans,
+    objective_harmony, kmeans_rounds}``."""
+    W_all = r_state = O = E = None
+    objective_kmeans: list[float] = []
+    objective_harmony: list[float] = []
+    kmeans_rounds: list[int] = []
+    for round_idx in range(p.max_iter):
+        # the cold start's inputs and everything run_round reads
+        st = dict(
+            Y=Y,
+            sigma=p.sigma,
+            theta=p.theta,
+            mode=mode,
+            nb=nb,
+            round_idx=round_idx,
+            max_iter=p.max_iter_cluster,
+            window=p.window_size,
+            eps=p.epsilon_cluster,
+            N=p.N,
+            Pr_b=p.Pr_b,
+            B0=p.B_vec[0],
+            push_objective=round_idx == 0,
+        )
+        if round_idx > 0:
+            st["W_all"] = W_all
+            st["prev_state"] = r_state
+        state = round_fn(st)
+        O, E, r_state = state["O"], state["E"], state["r_state"]
+        objective_kmeans += state["objectives"]
+        if round_idx == 0:
+            # the init pass's objective opens the harmony trace
+            objective_harmony.append(objective_kmeans[0])
+        kmeans_rounds.append(len(state["objectives"]) - (round_idx == 0))
+        objective_harmony.append(objective_kmeans[-1])
+        Y, W_all = solve_moe(p, O, E, Y, state["combos"])
+        if on_round is not None and on_round(round_idx, objective_kmeans[-1]) is False:
+            break
+        if harmony_converged(objective_harmony, p.epsilon_harmony):
+            break
+    return {
+        "Y": Y,
+        "W_all": W_all,
+        "O": O,
+        "E": E,
+        "r_state": r_state,
+        "objective_kmeans": objective_kmeans,
+        "objective_harmony": objective_harmony,
+        "kmeans_rounds": kmeans_rounds,
+    }
+
+
+def make_fit_kernel(
     bc, code_cols: list[str], offsets: list[int], K: int, B: int,
     feature_col: str = "z_orig",
 ) -> Callable:
-    """ONE harmony round as ONE Arrow pass (single-partition inputs
-    only): the cold start of every batch (_cold_assign, as in
-    make_cold_start_kernel), then ``run_round`` with partials providers
-    that pass over the batches cached in-process — what the distributed
-    path runs as 3+ jobs per round is one (guide §4: collapse tiny
-    Python-worker round-trips).
+    """The WHOLE harmony fit as ONE Arrow pass (single-partition inputs
+    only): the kernel caches its batches, runs ``run_fit`` with a round
+    function that passes over them in-process (every batch's cold start,
+    then ``run_round`` with in-process E-step and MoE partials
+    providers), and applies the final correction (M2).  What the
+    distributed path runs as a few jobs per round is one (guide §4:
+    collapse tiny Python-worker round-trips).
 
-    Emits the N (cell_id, z_orig, codes, zn) rows, whose ``state`` is
+    ``bc`` holds ``{p, Y, mode, nb}``, the arguments of ``run_fit``.
+    Emits the N (cell_id, codes, zn, z_corr) rows, whose ``state`` is
     NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
-    pickled ``run_round`` dict the driver assigns as-is."""
-
-    schema = _cell_schema(feature_col, code_cols, [("state", pa.binary())])
-    passed = ["cell_id", feature_col, *code_cols]
+    pickled ``run_fit`` dict the driver assigns as-is."""
+    schema = pa.schema(
+        [
+            ("cell_id", pa.int64()),
+            *[(c, pa.int32()) for c in code_cols],
+            ("zn", _VEC),
+            ("z_corr", _VEC),
+            ("state", pa.binary()),
+        ]
+    )
 
     def kernel(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        st = bc.value
-        acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
-        batches: list[tuple] = []
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            cell_ids, gcodes, zn = _cold_assign(
-                batch, st, code_cols, offsets, acc, feature_col
-            )
-            batches.append(
-                (zn, gcodes, cell_ids,
-                 _matrix(batch, feature_col, np.float64), _codes(batch, code_cols))
-            )
-            cols = {c: batch.column(c) for c in passed}
-            yield _with_nulls(schema, {**cols, "zn": _list_array(zn)})
-        if not acc.seen:
+        fp = bc.value
+        cells = [
+            (batch, batch.column("cell_id").to_numpy(), _matrix(batch, feature_col),
+             _codes(batch, code_cols, offsets), _matrix(batch, feature_col, np.float64),
+             _codes(batch, code_cols))
+            for batch in it
+            if batch.num_rows
+        ]
+        if not cells:
             return
+        zn = [None] * len(cells)  # each batch's zn, as of its last cold start
 
-        def estep_parts(state: dict, block: int | None):
-            eacc = _PartialAcc(K, B)
-            for zn, g, ids, _, _ in batches:
-                if block is not None:
-                    m = block_ids(ids, st["round_idx"], st["nb"]) == block
-                    if not m.any():
-                        continue
-                    zn, g = zn[m], g[m]
-                R, dist = _apply_state(zn, g, state)
-                eacc.add(R, dist, g)
-            return eacc.partials()
+        def round_fn(st: dict) -> dict:
+            acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
+            for i, (_, ids, z, g, _, _) in enumerate(cells):
+                zn[i] = _cold_assign(ids, z, g, zn[i], st, acc)
 
-        def moe_combos(r_state: dict) -> dict:
-            macc: dict[tuple, list] = {}
-            for zn, g, ids, z64, codes in batches:
-                _moe_accumulate(macc, z64, zn, g, codes, r_state, ids)
-            return macc
+            def estep_parts(state: dict, block: int | None):
+                eacc = _PartialAcc(K, B)
+                for (_, ids, _, g, _, _), x in zip(cells, zn):
+                    if block is not None:
+                        m = block_ids(ids, st["round_idx"], st["nb"]) == block
+                        if not m.any():
+                            continue
+                        x, g = x[m], g[m]
+                    R, dist = _apply_state(x, g, state)
+                    eacc.add(R, dist, g)
+                return eacc.partials()
 
-        state = run_round(st, acc.partials(), estep_parts, moe_combos)
-        blob = pickle.dumps(state, protocol=pickle.HIGHEST_PROTOCOL)
+            def moe_combos(r_state: dict) -> dict:
+                macc: dict[tuple, list] = {}
+                for (_, ids, _, g, z64, codes), x in zip(cells, zn):
+                    _moe_accumulate(macc, z64, x, g, codes, r_state, ids)
+                return macc
+
+            return run_round(st, acc.partials(), estep_parts, moe_combos)
+
+        fit = run_fit(fp["p"], fp["Y"], fp["mode"], fp["nb"], round_fn)
+        for (batch, ids, z, g, _, _), x in zip(cells, zn):
+            R, _ = recompute_R(x, g, fit["r_state"], cell_ids=ids)
+            zc = _correction(z, R, g, fit["W_all"])
+            cols = {c: batch.column(c) for c in ["cell_id", *code_cols]}
+            yield _with_nulls(
+                schema, {**cols, "zn": _list_array(x), "z_corr": _list_array(zc.astype(F32))}
+            )
+        blob = pickle.dumps(fit, protocol=pickle.HIGHEST_PROTOCOL)
         yield _with_nulls(schema, {"state": pa.array([blob], pa.binary())})
 
     return kernel

@@ -13,6 +13,14 @@ python -m pytest perfbench/test_perfbench.py -q
 echo "== pytest (sf0.001 fixtures + unit/property/plan/streaming) =="
 python -m pytest tests/ -q
 
+echo "== fused harmony path (30k cells, the whole fit in one pass) =="
+python3 perfbench/run.py --workload harmony_fused --seed 1 --seconds 1 --trace 0 \
+    | tail -n 1 | python -c "
+import json, sys
+d = json.load(sys.stdin)
+assert d['correct'] is True, d
+print('harmony_fused OK:', d['attempted'], 'checks')"
+
 echo "== distributed harmony path (66k cells, above the fuse gate) =="
 python3 perfbench/run.py --workload harmony_distributed --seed 1 --seconds 1 --trace 0 \
     | tail -n 1 | python -c "

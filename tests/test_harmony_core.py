@@ -414,8 +414,8 @@ def test_spark_blocked_estep_matches_numpy(spark, spark_fixture_df):
 
 
 def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
-    """The single-partition fused round pass (ONE Arrow pass per harmony
-    round, kernels.make_round_kernel, whose state row the driver assigns
+    """The single-partition fused fit pass (ONE Arrow pass per harmony
+    fit, kernels.make_fit_kernel, whose state row the driver assigns
     as-is) must reproduce the distributed per-iteration path EXACTLY —
     same O/E/Y/W, objective traces, iteration counts, final soft
     assignment and corrected embedding — because the Gauss-Seidel chain,
@@ -563,7 +563,9 @@ def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
 @pytest.mark.parametrize("path", ["fused", "distributed"])
 def test_no_checkpoint_after_last_round(spark, spark_fixture_df, monkeypatch, path):
     """Lineage is truncated only between rounds: with early stop off, a
-    max_iter-round fit takes exactly max_iter - 1 localCheckpoints."""
+    distributed max_iter-round fit takes exactly max_iter - 1
+    localCheckpoints, and the fused fit (one pass, no lineage between
+    rounds) takes none."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, *_ = spark_fixture_df
@@ -585,7 +587,36 @@ def test_no_checkpoint_after_last_round(spark, spark_fixture_df, monkeypatch, pa
     assert model.run().count() == df.count()
     model.cleanup()
     assert len(model.kmeans_rounds) == 3
-    assert len(calls) == 2
+    assert len(calls) == (2 if path == "distributed" else 0)
+
+
+def test_fused_fit_is_one_pass(spark, spark_fixture_df):
+    """Below the fuse gate a whole fit — every round and the final
+    correction — is ONE Spark job: with ``init_Y`` no init sample is
+    taken, so run() submits exactly the fit pass, whose collect of the
+    state row also fills the cache the returned frame reads."""
+    from harmony_spark.core.algorithm import HarmonySpark
+
+    df, Z, *_ = spark_fixture_df
+    n = df.count()
+    model = HarmonySpark(
+        df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
+        nclust=6, max_iter=3, early_stop=False, seed=5,
+        init_Y=np.eye(Z.shape[1], 6, dtype=np.float32),
+    )
+    assert model._cells_nparts == 1
+    sc = spark.sparkContext
+    group = "test-fused-fit-is-one-pass"
+    sc.setJobGroup(group, "fused fit")
+    try:
+        out = model.run()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+    assert len(model.kmeans_rounds) == 3
+    assert out.count() == n
+    model.cleanup()
 
 
 def test_c5_support_filter_active_cross_oracle(spark, spark_fixture_df):
@@ -631,7 +662,7 @@ def test_arrowhead_solve_matches_dense():
     solver on random single-covariate MoE Gram systems (diag = counts +
     lambda, border = counts, corner = total mass), and refuse degenerate
     pivots with LinAlgError like the dense path."""
-    from harmony_spark.core.algorithm import HarmonySpark
+    from harmony_spark.core.kernels import arrowhead_solve
 
     rng = np.random.default_rng(11)
     for _ in range(25):
@@ -644,13 +675,13 @@ def test_arrowhead_solve_matches_dense():
         G[1:, 0] = counts
         G[np.arange(1, B + 1), np.arange(1, B + 1)] = counts + lam
         rhs = rng.standard_normal((B + 1, d))
-        W_fast = HarmonySpark._arrowhead_solve(G, rhs)
+        W_fast = arrowhead_solve(G, rhs)
         W_dense = np.linalg.solve(G, rhs)
         np.testing.assert_allclose(W_fast, W_dense, rtol=1e-9, atol=1e-9)
 
     bad = np.zeros((3, 3))  # zero diagonal -> degenerate
     with pytest.raises(np.linalg.LinAlgError):
-        HarmonySpark._arrowhead_solve(bad, np.ones((3, 2)))
+        arrowhead_solve(bad, np.ones((3, 2)))
 
 
 def test_matrix_api_orientation_inference(spark):
@@ -864,8 +895,10 @@ def test_load_model_refuses_precision_downcast(spark, spark_fixture_df, tmp_path
 @pytest.mark.parametrize("path", ["fused", "distributed"])
 def test_progress_callback_and_abort(spark, sf_dir, path):
     """C6 progress/abort: the callback sees every round's objective, and
-    returning False stops the loop early while still producing a full
-    corrected embedding — on both round strategies."""
+    returning False stops the fit after that round while still producing
+    a full corrected embedding — on both strategies.  The fused fit
+    replays the calls after its pass and reruns it to the aborted
+    round, so its model equals a fit that stopped there."""
     from pyspark.sql import functions as F
 
     from harmony_spark.core.algorithm import HarmonySpark
@@ -875,21 +908,25 @@ def test_progress_callback_and_abort(spark, sf_dir, path):
         "vec_id", "embedding", F.col("label").cast("string").alias("label")
     )
 
-    def build():
+    def build(max_iter=4):
         model = HarmonySpark(
             e, ["label"], features_col="embedding", id_col="vec_id",
-            nclust=3, max_iter=4, lamb=1.0, sigma=0.1, seed=7,
+            nclust=3, max_iter=max_iter, lamb=1.0, sigma=0.1, seed=7,
+            early_stop=False,  # every round runs, so an abort cuts the fit short
         )
         assert model._cells_nparts == 1  # fixture is fused-eligible
         if path == "distributed":
             model._cells_nparts = 2  # strategy switch only; data unchanged
         return model
 
+    def z_corr(out):
+        return np.stack([r["z_corr"] for r in out.orderBy("cell_id").collect()])
+
     seen = []
     m1 = build()
     n_cells = m1.run(progress=lambda i, obj: seen.append((i, obj))).count()
     m1.cleanup()
-    assert len(seen) >= 1
+    assert len(seen) == 4
     assert [i for i, _ in seen] == list(range(len(seen)))
     assert all(obj > 0 for _, obj in seen)
 
@@ -897,5 +934,10 @@ def test_progress_callback_and_abort(spark, sf_dir, path):
     m2 = build()
     out = m2.run(progress=lambda i, obj: aborted.append(i) or i < 0)  # False after round 0
     assert out.count() == n_cells  # abort still yields every cell corrected
-    m2.cleanup()
     assert aborted == [0]  # loop stopped cooperatively after round 1
+    assert len(m2.kmeans_rounds) == 1  # the model is the one-round fit
+    if path == "fused":
+        m3 = build(max_iter=1)
+        np.testing.assert_array_equal(z_corr(out), z_corr(m3.run()))
+        m3.cleanup()
+    m2.cleanup()
