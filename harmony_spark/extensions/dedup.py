@@ -16,8 +16,6 @@ explicit doc_id window, never as a global cross join.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -297,7 +295,7 @@ def _lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
     return session_memo(
         spark,
-        ("lsh_pairs", os.path.abspath(sf)),
+        ("lsh_pairs", sf),
         lambda: _lsh_pairs_of(table_parallel(spark, sf, "documents")),
     )
 
@@ -313,7 +311,7 @@ def _lsh_cc(spark: SparkSession, sf: str) -> DataFrame:
 
     return session_memo(
         spark,
-        ("lsh_cc", os.path.abspath(sf)),
+        ("lsh_cc", sf),
         lambda: connected_components(_lsh_pairs(spark, sf), "da", "db"),
     )
 
@@ -796,7 +794,7 @@ def q89(spark: SparkSession, sf: str) -> DataFrame:
     # as _lsh_pairs
     pairs = session_memo(
         spark,
-        ("q89_pairs", os.path.abspath(sf)),
+        ("q89_pairs", sf),
         lambda: prefix_filtered_pairs_exact(
             table_parallel(spark, sf, "documents")
         ),

@@ -46,9 +46,7 @@ def _doc_entities(spark: SparkSession, sf: str) -> DataFrame:
             rec, id_col="doc_id", key_col="head", block_col="blk"
         )
 
-    import os as _os
-
-    return session_memo(spark, ("doc_entities", _os.path.abspath(sf)), build)
+    return session_memo(spark, ("doc_entities", sf), build)
 
 
 def resolve_entities(

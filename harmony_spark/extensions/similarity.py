@@ -22,9 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-import os
-
-from harmony_spark.io import table
+from harmony_spark.io import session_memo, session_value, table
 from harmony_spark.registry import register
 
 TOP_K = 5
@@ -654,19 +652,17 @@ def train_pq_codebooks(
     return books
 
 
-_PQ_BOOK_CACHE: dict[tuple, list] = {}
-
-
 def _pq_codebooks_for(df: DataFrame, sf: str, col: str = "embedding") -> list:
     """Train-once/serve-many: codebook training is deterministic in the
-    (immutable) dataset path, so repeated retrieval calls reuse the
-    trained books instead of re-running the sample-collect + k-means —
-    the same lifecycle a production PQ index has (codebooks persisted at
-    build time, reused by every query batch)."""
-    key = (sf, col)
-    if key not in _PQ_BOOK_CACHE:
-        _PQ_BOOK_CACHE[key] = train_pq_codebooks(df, col=col)
-    return _PQ_BOOK_CACHE[key]
+    (immutable) dataset, so repeated retrieval calls in a session reuse
+    the trained books from the session store (``io.session_value``)
+    instead of re-running the sample-collect + k-means — the same
+    lifecycle a production PQ index has (codebooks trained at build
+    time, reused by every query batch).  The books are dropped with the
+    session."""
+    return session_value(
+        df.sparkSession, ("pq_books", sf, col), lambda: train_pq_codebooks(df, col=col)
+    )
 
 
 def pq_encode(df: DataFrame, books: list, col: str = "embedding") -> DataFrame:
@@ -723,11 +719,9 @@ def pq_topk(
     # expression is a ~PQ_M*PQ_KS*ds-node tree whose Catalyst+codegen
     # pass measured ~2.3 s alone, so serve-time calls reuse the
     # session-memoized build instead of re-planning it per query batch.
-    from harmony_spark.io import session_memo
-
     encoded = session_memo(
         spark,
-        ("pq_index", os.path.abspath(sf)),
+        ("pq_index", sf),
         lambda: pq_encode(e, books).select("vec_id", "pq_code"),
     )
 

@@ -522,13 +522,11 @@ def bm25_table(spark: SparkSession, sf: str, terms=_BM25_TERMS) -> DataFrame:
     lexical index materializes once): the full-corpus tokenize/explode
     feeds TWO branches (doc lengths + term frequencies), so a warm
     session skips both passes for every consumer."""
-    import os
-
     from harmony_spark.io import session_memo
 
     return session_memo(
         spark,
-        ("bm25_table", os.path.abspath(sf), tuple(terms)),
+        ("bm25_table", sf, tuple(terms)),
         lambda: _bm25_table_build(spark, sf, terms),
     )
 

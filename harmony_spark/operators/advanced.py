@@ -641,20 +641,23 @@ def q78(spark: SparkSession, sf: str) -> DataFrame:
         tempfile.gettempdir(),
         f"harmony_ivf_idx_{hashlib.md5(sf.encode()).hexdigest()[:8]}",
     )
-    # Build-once/search-many: under the warm-session flag the index
-    # build is memoized per (appId, path) — the bench then measures
-    # SEARCH, which is the operation this query exists to demonstrate
-    # (the build is deterministic over the session-immutable testdata,
-    # the same contract as io.session_memo).  Cold/CI runs rebuild.
-    built: set = getattr(q78, "_built", set())
-    q78._built = built
-    key = (spark.sparkContext.applicationId, idx)
-    # The memo only proves WE built it this session — the shared /tmp
+    # Build-once/search-many: under the warm-session flag the built
+    # index is marked in the session store (io.session_value) — the
+    # bench then measures SEARCH, which is the operation this query
+    # exists to demonstrate (the build is deterministic over the
+    # session-immutable testdata).  Cold/CI runs rebuild.
+    def build() -> str:
+        build_ivf_index(spark, sf, idx)
+        return idx
+
+    # The marker only proves WE built it this session — the shared /tmp
     # dir can vanish underneath us (tempdir cleanup, another process),
     # so the skip is additionally gated on the index still being there.
-    if not (hio._cache_enabled() and key in built and os.path.isdir(idx)):
-        build_ivf_index(spark, sf, idx)
-        built.add(key)
+    if not (
+        hio._cache_enabled()
+        and os.path.isdir(hio.session_value(spark, ("ivf_index", idx), build))
+    ):
+        build()
     queries = _ivf_scored(spark, sf).where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),

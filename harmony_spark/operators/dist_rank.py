@@ -20,13 +20,13 @@ Every step is a shuffle-parallel plan; nothing entity-scale ever passes
 through a single task.  Used by q185/q210/q221/q247/q276/q280 (and
 available to any future query needing a global order statistic).
 
-**Statistics cache** (HARMONY_STATS_CACHE=0 disables): the shard
-boundaries and per-shard counts are pure functions of the input plan,
-and a session's inputs are immutable (parquet snapshots / cached
-tables), so both are memoized per (session, analyzed-plan semanticHash,
-key, shards, partition_by).  A repeated query — the warm runs every
-warehouse serves, and the bench's best-of-N — then pays ZERO driver
-actions for phases 1-2 and runs the single phase-3 pass.  This is the
+**Statistics cache**: the shard boundaries and per-shard counts are
+pure functions of the input plan, and a session's inputs are immutable
+(parquet snapshots / cached tables), so both are memoized in the
+session store (``io.session_value``) per (session, analyzed-plan
+semanticHash, key, shards, partition_by).  A repeated query — the warm
+runs every warehouse serves, and the bench's best-of-N — then pays ZERO
+driver actions for phases 1-2 and runs the single phase-3 pass.  This is the
 same contract as Spark's own CBO statistics: cached derived stats over
 immutable-within-session data.  Callers whose input is freshly-written
 mutable state must pass ``cacheable=False`` (none of the current
@@ -36,14 +36,12 @@ testdata tables).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SHARDS = 64
+from harmony_spark.io import session_value
 
-_STATS_CACHE: dict[tuple, object] = {}
+DEFAULT_SHARDS = 64
 
 
 def _has_rdd_leaf(node) -> bool:
@@ -53,15 +51,19 @@ def _has_rdd_leaf(node) -> bool:
     return any(_has_rdd_leaf(ch.apply(i)) for i in range(ch.length()))
 
 
-def _stats_key(df: DataFrame, *extra) -> tuple | None:
-    """Cache key from the ANALYZED logical plan's semantic hash (None =
-    caching unavailable/disabled).  Plans containing a LogicalRDD leaf
-    (a localCheckpoint) are NOT cacheable this way: the checkpoint RDD
-    id changes on every call, so the hash never repeats — callers that
-    checkpoint a shared input before ranking pass an explicit
-    ``stats_token`` instead (asserting the input's in-session
-    identity)."""
-    if os.environ.get("HARMONY_STATS_CACHE", "1") == "0":
+def _stats_key(
+    df: DataFrame, cacheable: bool, stats_token, *extra
+) -> tuple | None:
+    """Session-store key for the shard statistics (None = not cached).
+    An explicit ``stats_token`` asserts the input's in-session identity.
+    Otherwise the key is the ANALYZED logical plan's semantic hash;
+    plans containing a LogicalRDD leaf (a localCheckpoint) are NOT
+    cacheable this way: the checkpoint RDD id changes on every call, so
+    the hash never repeats — callers that checkpoint a shared input
+    before ranking pass a ``stats_token`` instead."""
+    if stats_token is not None:
+        return ("rank_stats", "tok", tuple(stats_token), *extra)
+    if not cacheable:
         return None
     try:
         analyzed = df._jdf.queryExecution().analyzed()
@@ -70,30 +72,32 @@ def _stats_key(df: DataFrame, *extra) -> tuple | None:
         h = analyzed.semanticHash()
     except Exception:  # noqa: BLE001 — cache is best-effort
         return None
-    app_id = df.sparkSession.sparkContext.applicationId
-    _evict_stale(app_id)
-    return (app_id, h, *extra)
+    return ("rank_stats", h, *extra)
 
 
-def _evict_stale(app_id: str) -> None:
-    """Drop stats entries from stopped sessions (same contract as
-    io._evict_stale): keys lead with applicationId, and stale entries
-    would otherwise accumulate for process lifetime."""
-    for k in [k for k in _STATS_CACHE if k[0] != app_id]:
-        del _STATS_CACHE[k]
+def _sharded_stats(df: DataFrame, key: str, shards: int, ck, stats_of):
+    """``(sh, stats)``: ``df`` range-sharded on ``key`` plus the
+    driver-side ``stats_of(sh)`` rows, served from the session store
+    when ``ck`` was seen before.  The cold path checkpoints ``df`` so
+    the boundary and statistics actions scan it once; the warm path
+    skips the checkpoint — phases 1-2 are cache hits and the single
+    remaining pass reads the (typically cached) input once."""
+    sh = None
 
+    def build():
+        nonlocal sh
+        src = df.localCheckpoint(eager=False)
+        bounds = _range_bounds(src, key, shards)
+        sh = with_range_shard(src, key, shards, bounds=bounds)
+        return bounds, stats_of(sh)
 
-def _token_key(df: DataFrame, stats_token, *extra) -> tuple | None:
-    if os.environ.get("HARMONY_STATS_CACHE", "1") == "0":
-        return None
-    app_id = df.sparkSession.sparkContext.applicationId
-    _evict_stale(app_id)
-    return (
-        app_id,
-        "tok",
-        tuple(stats_token),
-        *extra,
-    )
+    if ck is None:
+        bounds, stats = build()
+    else:
+        bounds, stats = session_value(df.sparkSession, ck, build)
+    if sh is None:  # warm path
+        sh = with_range_shard(df, key, shards, bounds=bounds)
+    return sh, stats
 
 
 def _range_bounds(df: DataFrame, key: str, shards: int) -> list:
@@ -168,30 +172,19 @@ def with_global_rank(
     free by-product of the offset phase, handy for ntile/median math.
     """
     pcols = list(partition_by)
-    if stats_token is not None:
-        ck = _token_key(df, stats_token, "rank", key, shards, tuple(pcols))
-    elif cacheable:
-        ck = _stats_key(df, "rank", key, shards, tuple(pcols))
-    else:
-        ck = None
-    hit = _STATS_CACHE.get(ck) if ck is not None else None
-    if hit is None:
-        df = df.localCheckpoint(eager=False)
-        bounds = _range_bounds(df, key, shards)
-        sh = with_range_shard(df, key, shards, bounds=bounds)
-        counts = [
+    ck = _stats_key(df, cacheable, stats_token, "rank", key, shards, tuple(pcols))
+    sh, counts = _sharded_stats(
+        df,
+        key,
+        shards,
+        ck,
+        lambda sh: [
             tuple(r)
             for r in sh.groupBy(*pcols, "__shard")
             .agg(F.count("*").alias("n"))
             .collect()
-        ]
-        if ck is not None:
-            _STATS_CACHE[ck] = (bounds, counts)
-    else:
-        bounds, counts = hit
-        # warm path: no checkpoint — phases 1-2 are cache hits and the
-        # single remaining pass reads the (typically cached) input once
-        sh = with_range_shard(df, key, shards, bounds=bounds)
+        ],
+    )
     np = len(pcols)
     bypart: dict[tuple, list] = {}
     for r in counts:  # positional: [*pcols, shard, n]
@@ -278,26 +271,17 @@ def with_global_order_stats(
     (Python ints — free by-products of the offset phase)."""
     sum_cols = sum_cols or {}
     srcs = sorted(sum_cols)
-    if stats_token is not None:
-        ck = _token_key(df, stats_token, "ostats", key, shards, tuple(srcs))
-    elif cacheable:
-        ck = _stats_key(df, "ostats", key, shards, tuple(srcs))
-    else:
-        ck = None
-    hit = _STATS_CACHE.get(ck) if ck is not None else None
-    if hit is None:
-        df = df.localCheckpoint(eager=False)
-        bounds = _range_bounds(df, key, shards)
-        sh = with_range_shard(df, key, shards, bounds=bounds)
-        aggs = [F.count("*").alias("__n")] + [
-            F.sum(c).cast("long").alias(f"__s_{c}") for c in srcs
-        ]
-        stats = [tuple(r) for r in sh.groupBy("__shard").agg(*aggs).collect()]
-        if ck is not None:
-            _STATS_CACHE[ck] = (bounds, stats)
-    else:
-        bounds, stats = hit
-        sh = with_range_shard(df, key, shards, bounds=bounds)
+    ck = _stats_key(df, cacheable, stats_token, "ostats", key, shards, tuple(srcs))
+    aggs = [F.count("*").alias("__n")] + [
+        F.sum(c).cast("long").alias(f"__s_{c}") for c in srcs
+    ]
+    sh, stats = _sharded_stats(
+        df,
+        key,
+        shards,
+        ck,
+        lambda sh: [tuple(r) for r in sh.groupBy("__shard").agg(*aggs).collect()],
+    )
     stats = sorted(stats, key=lambda r: r[0])  # positional: shard, n, sums...
     rows, rn_off = [], 0
     s_off = {c: 0 for c in srcs}

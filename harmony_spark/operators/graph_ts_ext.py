@@ -46,13 +46,11 @@ def _copurchase_pairs(
     Under the warm-session flag the canonical (src, dst) edge set is
     memoized per session (io.session_memo) — five graph queries share
     this exact build, and it is deterministic over immutable inputs."""
-    import os as _os
-
     from harmony_spark.io import session_memo
 
     return session_memo(
         spark,
-        ("copurchase", _os.path.abspath(sf), build, src, dst),
+        ("copurchase", sf, build, src, dst),
         lambda: _copurchase_pairs_build(spark, sf, src, dst, build),
     )
 
@@ -66,11 +64,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
     session that runs both graph queries pays for the orientation
     once; cold/CI runs keep the eager persist+count semantics (real
     stats let Catalyst broadcast the node-scale lookups)."""
-    import os as _os
-
     from harmony_spark.io import session_memo
-
-    key = _os.path.abspath(sf)
 
     def build_deg() -> DataFrame:
         pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
@@ -81,7 +75,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
         deg.count()
         return deg
 
-    deg = session_memo(spark, ("copurchase_deg", key), build_deg)
+    deg = session_memo(spark, ("copurchase_deg", sf), build_deg)
 
     def build_oriented() -> DataFrame:
         pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
@@ -100,9 +94,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         ).localCheckpoint(eager=True)
 
-    oriented = session_memo(
-        spark, ("copurchase_oriented", key), build_oriented
-    )
+    oriented = session_memo(spark, ("copurchase_oriented", sf), build_oriented)
 
     def build_adj() -> DataFrame:
         adj = (
@@ -111,7 +103,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
         adj.count()
         return adj
 
-    adj = session_memo(spark, ("copurchase_adj", key), build_adj)
+    adj = session_memo(spark, ("copurchase_adj", sf), build_adj)
     return deg, oriented, adj
 
 
@@ -131,8 +123,6 @@ def _copurchase_sym(spark: SparkSession, sf: str) -> DataFrame:
     (memo off) keep eager per-call semantics via the in-build eager
     checkpoint, so iterative consumers never inline the orders×lineitem
     pair build into every round's plan."""
-    import os as _os
-
     from harmony_spark.io import _cache_enabled, scaled_partitions, session_memo
 
     def build() -> DataFrame:
@@ -155,9 +145,7 @@ def _copurchase_sym(spark: SparkSession, sf: str) -> DataFrame:
             sym = sym.localCheckpoint(eager=True)
         return sym
 
-    return session_memo(
-        spark, ("copurchase_sym", _os.path.abspath(sf)), build
-    )
+    return session_memo(spark, ("copurchase_sym", sf), build)
 
 
 def _copurchase_tri_edges(spark: SparkSession, sf: str) -> DataFrame:
@@ -168,8 +156,6 @@ def _copurchase_tri_edges(spark: SparkSession, sf: str) -> DataFrame:
     session running both graph queries pays the two broadcast joins +
     the O(m·sqrt m) intersection compute once.  Edges with an empty
     intersection are kept (q292 sums their 0; q352 filters them)."""
-    import os as _os
-
     from harmony_spark.io import session_memo
 
     def build() -> DataFrame:
@@ -186,9 +172,7 @@ def _copurchase_tri_edges(spark: SparkSession, sf: str) -> DataFrame:
             .select("s", "t", F.array_intersect("nu", "nv").alias("ws"))
         )
 
-    return session_memo(
-        spark, ("copurchase_tri_edges", _os.path.abspath(sf)), build
-    )
+    return session_memo(spark, ("copurchase_tri_edges", sf), build)
 
 
 def _copurchase_pairs_build(
@@ -1573,8 +1557,6 @@ def _custpart_bipartite(spark: SparkSession, sf: str) -> DataFrame:
     q278 Adamic-Adar (flagless projection via _custpart_flat).
     Session-memoized — one orders×lineitem join + distinct per warm
     session instead of one per query per run."""
-    import os as _os
-
     from harmony_spark.io import _cache_enabled, session_memo, table_parallel
 
     def build() -> DataFrame:
@@ -1603,9 +1585,7 @@ def _custpart_bipartite(spark: SparkSession, sf: str) -> DataFrame:
             bp = bp.localCheckpoint(eager=True)
         return bp
 
-    return session_memo(
-        spark, ("custpart_bp", _os.path.abspath(sf)), build
-    )
+    return session_memo(spark, ("custpart_bp", sf), build)
 
 
 def _custpart_flat(spark: SparkSession, sf: str) -> DataFrame:
@@ -1614,8 +1594,6 @@ def _custpart_flat(spark: SparkSession, sf: str) -> DataFrame:
     is exactly a (cust, part) in the raw distinct — so the warm path
     re-distincts 600k memoized rows instead of re-joining the fact
     tables."""
-    import os as _os
-
     from harmony_spark.io import _cache_enabled, session_memo
 
     def build() -> DataFrame:
@@ -1627,9 +1605,7 @@ def _custpart_flat(spark: SparkSession, sf: str) -> DataFrame:
             flat = flat.localCheckpoint(eager=True)
         return flat
 
-    return session_memo(
-        spark, ("custpart_bp_flat", _os.path.abspath(sf)), build
-    )
+    return session_memo(spark, ("custpart_bp_flat", sf), build)
 
 
 @register(

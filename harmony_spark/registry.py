@@ -44,59 +44,25 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return wrap
 
 
-# The strongest LLM-pipeline evidence: composed dedup funnels, the
-# prefix-filtered similarity join, and the round-3 additions (partition
-# pruning, IVF-PQ, quality funnel, benchmark decontamination, as-of
-# join, sequence packing). Promoted ahead of the q33+ extensions so
-# they land inside the driver's 50-entry window. To make room, rows
-# whose components stay covered by other in-window entries are demoted:
-# q33/q34/q35/q36/q38 (X2 — covered by q89, q97, q98, q130, q132),
-# q39/q40/q42 (X4 — covered by q32, q102, q148's gates), q37 (X3 —
-# covered by q31, q101), and q41 (X1 — covered by q30). q134 gives the
-# CDC family its only in-window row; q148 the eval-metrics family its
-# first; q164/q165 the as-of and packing operators theirs.
-_PROMOTED = (
-    # round-4 rotation (VERDICT r3 #3): ten family heads that had never
-    # had a driver row, swapped in for ten long-verified q0x rows whose
-    # components stay covered by the identical local oracle gate and by
-    # other in-window rows (see _ROTATED_OUT).
-    # round-4 session-7 heads: one driver row for each family added
-    # this round (experimentation depth, distribution drift, PR-AUC,
-    # IVM temporality, probabilistic linkage, winnowing local overlap,
-    # Markov attribution), swapped in for seven more long-green q0x
-    # kernel rows that stay pinned by the invariant + local gates (see
-    # _ROTATED_OUT).
-    # round-5 rotation (VERDICT r4 #5): ten round-4 family heads that
-    # have never had a driver row (grid DBSCAN, triangles, SRP LSH,
-    # equi-depth histogram, group-sequential, Kruskal-Wallis,
-    # customer-alive, Kneser-Ney, elasticity, ABC), swapped in for ten
-    # long-green q0x relational rows now in _ROTATED_OUT.
+# The driver's correctness gate checks the FIRST 50 registry entries:
+# the four harmony_* pipelines, then the promoted queries, in this order.
+# Every other query follows by query number and is covered by the
+# identical local oracle gate at sf0.001.
+DRIVER_WINDOW = (
+    "harmony_correct",
+    "harmony_correct_blocked",
+    "harmony_correct_2cov",
+    "harmony_stream_drift",
     "q286_grid_density_clusters",
     "q292_triangle_count",
     "q318_hyperplane_lsh",
     "q325_equidepth_histogram",
     "q334_customer_alive",
     "q335_kneser_ney",
-    # round-7 rotation (VERDICT r6 #1): the 3+-round-green session-7
-    # heads (q298/q303/q304/q311/q314/q322/q323) and surviving r3/r4
-    # rows (q101/q125/q128/q152/q156), plus six 2-round-green round-5
-    # heads whose families stay covered in-window (q327 by q366's
-    # trend test, q329 by q359/q360's rank tests, q342 by q376's
-    # price-index row, q343 by its local census gate, q348 by q353's
-    # in-window EOQ, q350 by q361's in-window Fleiss kappa), move to
-    # _ROTATED_OUT; in their place the 14 never-driver-checked
-    # round-6 heads plus the re-seated q51/q64/q66/q74 (red in r1 on
-    # the long-fixed ingest bug, never re-checked since).
     "q51_sql_text_surface",
     "q64_json_typed",
     "q66_asof_join",
     "q74_gap_fill",
-    # round-5 second rotation: one driver row for each family added
-    # this round (gaps-and-islands, Croston, newsvendor, Cohen's
-    # kappa, local clustering coefficient, uplift/Qini), swapped in
-    # for six round-3 promotions that have been driver-green since r3
-    # (q100/q102/q104/q134/q148/q164 — each stays pinned by the
-    # identical local oracle gate at sf0.001).
     "q346_order_islands",
     "q347_croston_intermittent",
     "q352_local_clustering",
@@ -115,12 +81,6 @@ _PROMOTED = (
     "q378_tukey_hsd",
     "q379_dunning_collocations",
     "q380_mann_kendall_trend",
-    # round-6 rotation (VERDICT r5 #1): twelve never-driver-checked
-    # family heads (Spearman, PageRank, BFS, recsys holdout, log-rank,
-    # window funnel, McNemar, TTR, EOQ, Shapley, RMST, the new exact
-    # substring-span dedup), swapped in for the twelve longest-green
-    # rows (q28-q32 and seven r4 promotions — all stay pinned by the
-    # identical local oracle gate at sf0.001, see _ROTATED_OUT).
     "q219_spearman_rho",
     "q225_pagerank",
     "q254_bfs_reachability",
@@ -133,12 +93,6 @@ _PROMOTED = (
     "q356_shapley_attribution",
     "q357_rmst",
     "q358_exact_span_dedup",
-    # round-6 second rotation: one driver row for each family added
-    # this round (multi-rater kappa, Hurst R/S, entity-scale hash
-    # bootstrap, trigram novelty, Fisher price index, Moran's I),
-    # swapped in for six round-3/4 promotions driver-green for 3+
-    # rounds (q89/q113/q130/q132/q165/q234 — each stays pinned by the
-    # identical local oracle gate at sf0.001, see _ROTATED_OUT).
     "q361_fleiss_kappa",
     "q363_hurst_exponent",
     "q365_hash_bootstrap_ci",
@@ -146,170 +100,19 @@ _PROMOTED = (
     "q376_fisher_price_index",
     "q377_morans_i",
 )
-# Rotated out of the driver window round-4: each was driver-green for
-# three consecutive rounds and stays pinned by the identical local
-# oracle gate at sf0.001 plus an in-window neighbour (q03/q05/q06/q07
-# by the kernel invariants + q04's L2 row; q09/q10 derive from q08
-# which stays; q14 is the vector twin of in-window q13; q19/q24 set
-# ops by in-window q22 anti-join; q25 scalar fns by q26 JSON row).
-_ROTATED_OUT = frozenset(
-    {
-        # round-5: driver-green since round 1/2; every one stays pinned
-        # by the identical local oracle gate and an in-window neighbour
-        # (q01 scan by every promoted scan-heavy row; q02 by the
-        # harmony_* rows; q15 rollup by q56's grouped aggregate; q16 by
-        # q125's broadcast-join regression; q17/q18 windows by q62/q128;
-        # q22/q23 joins by q134/q164 as-of family; q26 JSON by q64-family
-        # local gate; q27 tumbling by in-window q28 sessionization).
-        "q01_scan_filter_project",
-        "q02_stddev_sink",
-        "q15_rollup",
-        "q16_broadcast_join_arith",
-        "q17_topk_per_group",
-        "q18_sliding_window_avg",
-        "q22_anti_join",
-        "q23_range_join",
-        "q26_json_extract",
-        "q27_tumbling_window",
-        "q03_array_slice",
-        "q04_l2_norm",
-        "q08_batch_counts",
-        "q11_contingency",
-        "q12_expected_counts",
-        "q13_grouped_weighted_sums",
-        "q20_multiway_join",
-        "q21_left_outer_join",
-        "q05_grouped_zscore_clip",
-        "q06_safe_entropy",
-        "q07_partition_softmax",
-        "q09_batch_priors",
-        "q10_level_cardinality",
-        "q14_grouped_weighted_vector_sums",
-        "q19_union_all",
-        "q24_intersect",
-        "q25_string_date_fns",
-        # round-6: the last q2x/q3x originals plus seven r4 promotions,
-        # driver-green for 3+ rounds; q28 sessionization stays covered
-        # by q337's in-window funnel sessionization, q29/q30 dedup by
-        # the in-window q358 span-dedup + q132 incremental near-dup,
-        # q31 dot products by q101/q318's in-window vector rows, q32
-        # token stats by q351's in-window TTR census; q47 BPE by its
-        # golden-vocab pytest gate, q56/q62 grouped aggregates and
-        # percentiles by q325/q156, q73 components by q286's in-window
-        # CC, q97/q98 funnels by in-window q130, q107 packing by
-        # in-window q165.
-        "q28_sessionization",
-        "q29_dedup_by_key",
-        "q30_exact_dedup",
-        "q31_pairwise_dot",
-        "q32_token_stats",
-        "q47_bpe_token_counts",
-        "q56_pricing_summary",
-        "q62_percentiles",
-        "q73_dedup_components",
-        "q97_dedup_pipeline",
-        "q98_semantic_dedup",
-        "q107_sequence_packing",
-        # round-6 second rotation: r3/r4 promotions driver-green 3+
-        # rounds; q89's pair build stays pinned by its exactness tests
-        # + the in-window q358 span family, q113 SCD2 by q114's CDC
-        # local gate, q130/q132 funnels by their stage-boundary hash
-        # replays, q165 packing by the q107-family local gate, q234 by
-        # the LSH recall/error pytest gates.
-        "q89_prefix_similarity_join",
-        "q113_scd2_history",
-        "q130_full_curation",
-        "q132_incremental_neardup",
-        "q165_sequence_packing",
-        "q234_lsh_quality_eval",
-        # round-7: the 3+-round-green session-7/r3/r4 promotions and
-        # six 2-round-green round-5 heads; every one stays pinned by
-        # the identical local oracle gate at sf0.001 plus an in-window
-        # neighbour (q298/q303/q304 drift+eval by q354/q367; q311 IVM
-        # by the CDC local gates; q314 linkage by its EM pytest gate;
-        # q322 winnowing by in-window q358 span dedup; q323/q152
-        # Markov rows by in-window q356 Shapley attribution; q125
-        # regression by q371's jackknife over the same moments; q128
-        # rollup by q375's in-window calendar census; q156 median by
-        # in-window q325/q364; q101 PQ by its recall gate + in-window
-        # q318; q327 by q366, q329 by q359/q360, q342 by q376, q343 by
-        # its census gate, q348 by q353, q350 by q361).
-        "q101_pq_topk",
-        "q125_grouped_regression",
-        "q128_time_rollup",
-        "q152_markov_transitions",
-        "q156_exact_global_median",
-        "q298_cuped_adjustment",
-        "q303_wasserstein_drift",
-        "q304_average_precision",
-        "q311_ivm_window_advance",
-        "q314_fellegi_sunter",
-        "q322_winnowing_fingerprints",
-        "q323_markov_attribution",
-        "q327_group_sequential",
-        "q329_kruskal_wallis",
-        "q342_price_elasticity",
-        "q343_abc_classes",
-        "q348_newsvendor_stock",
-        "q350_cohens_kappa",
-    }
-)
-_DEMOTED = frozenset(
-    {
-        "q33_ngram_jaccard",
-        "q34_minhash_signatures",
-        "q35_minhash_lsh_pairs",
-        "q36_simhash_groups",
-        "q37_cosine_topk",
-        "q38_lsh_bucket_histogram",
-        "q39_lang_id",
-        "q40_quality_score",
-        "q41_fingerprint_dedup",
-        "q42_token_frequencies",
-    }
-)
-
-
-def _priority(name: str) -> tuple[int, int]:
-    """Registry ordering: the driver's correctness gate checks the FIRST
-    50 entries. In-window (positions 1-50): the four harmony_*
-    pipelines and forty-six promoted queries — six surviving round-5
-    rotation heads (q286/q292/q318/q325/q334/q335), the re-seated
-    q51/q64/q66/q74 (red in r1 on the long-fixed ingest bug, never
-    re-checked since), four round-5 family heads (q346/q347/q352/
-    q354), twelve round-6 rotation heads (q219/q225/q254/q282/q315/
-    q337/q349/q351/q353/q356/q357/q358), six round-6 new-family heads
-    (q361/q363/q365/q372/q376/q377), and the fourteen round-7
-    rotation heads — every round-6 addition that had never had a
-    driver row (q359/q360/q362/q364/q366/q367/q370/q371/q373/q374/
-    q375/q378/q379/q380), swapped in for the 3+-round-green session-7
-    and r3/r4 promotions plus six covered round-5 heads (see
-    _ROTATED_OUT). Out-of-window rows are covered by the identical
-    local oracle gate at sf0.001."""
-    if name in _PROMOTED:
-        return (2, _PROMOTED.index(name))
-    if name.startswith("q"):
-        num = int(name[1:].split("_", 1)[0])  # full number: q100+ parse too
-        if name in _ROTATED_OUT:
-            return (4, num)
-        if num <= 32:
-            return (0, num)
-        if name in _DEMOTED:
-            return (4, num)
-        if 33 <= num <= 47:
-            return (3, num)
-        if 83 <= num <= 92:
-            return (4, num)
-        return (5, num)
-    return (1, 0)  # harmony_* (stable sort keeps registration order)
 
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every module that registers queries, then return the
-    registry in driver-priority order (see :func:`_priority`)."""
+    registry in driver order: :data:`DRIVER_WINDOW`, then every other
+    query by query number."""
     from harmony_spark.operators import adapters, advanced, cdc, graph_ts_ext, intervals, inventory, journeys, layout, relational, spatial, stats_ext, tpch, windows, streaming_batch  # noqa: F401
     from harmony_spark.extensions import curation, dedup, factorization, multimodal, packing, records, similarity, sketches, text_analysis, tokenizer  # noqa: F401
     from harmony_spark.functions import preprocessing  # noqa: F401
     from harmony_spark.core import queries as core_queries  # noqa: F401
 
-    return {name: QUERIES[name] for name in sorted(QUERIES, key=_priority)}
+    rest = sorted(
+        set(QUERIES) - set(DRIVER_WINDOW),
+        key=lambda n: int(n[1:].split("_", 1)[0]),  # "q123_x" -> 123
+    )
+    return {name: QUERIES[name] for name in (*DRIVER_WINDOW, *rest)}

@@ -33,12 +33,8 @@ def get_spark(app_name: str = "harmony-spark", shuffle_partitions: int | None = 
         # window ran 5 tasks; 64k floor -> full parallelism, -20%).
         # At 100 TB post-shuffle partitions are >> 1 MB, so the lower
         # floor is inert there — it only stops byte-based coalescing
-        # from serializing compute-heavy small stages. Parameterized
-        # (env) like the other scale-dependent settings.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("HARMONY_AQE_MIN_PARTITION", "64k"),
-        )
+        # from serializing compute-heavy small stages.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow is the only sane Python<->JVM boundary at scale.

@@ -1,11 +1,16 @@
-"""HARMONY_CACHE_TABLES=1 (the bench's warm-input mode) must be a pure
+"""The session store in ``harmony_spark.io``.
+
+HARMONY_CACHE_TABLES=1 (the bench's warm-input mode) must be a pure
 performance knob: identical rows to the bare-scan path, one materialized
 copy per (session, sf_dir, table), and an InMemoryTableScan in the plan.
+Every entry is keyed per session, with dataset paths normalized, and
+entries of stopped sessions are swept.
 """
 
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 
 from harmony_spark import io as hio
 
@@ -14,10 +19,11 @@ from harmony_spark import io as hio
 def cache_env(monkeypatch):
     monkeypatch.setenv("HARMONY_CACHE_TABLES", "1")
     yield
-    # unpersist this session's entries so later tests see a cold session
-    for key, df in list(hio._TABLE_CACHE.items()):
-        df.unpersist()
-        del hio._TABLE_CACHE[key]
+    # empty the whole store so later tests see a cold session
+    for value in hio._STORE.values():
+        if isinstance(value, DataFrame):
+            value.unpersist()
+    hio._STORE.clear()
 
 
 SF = "/root/testdata/sf0.001"
@@ -43,3 +49,39 @@ def test_cached_events_ts_normalized(spark, cache_env):
     ev = hio.table(spark, SF, "events")
     assert dict(ev.dtypes)["ts"] == "timestamp"
     assert ev.count() > 0
+
+
+def test_session_memo_builds_once_per_dataset(spark, cache_env):
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(3)
+
+    rel = os.path.relpath(SF)
+    assert rel != SF
+    first = hio.session_memo(spark, ("test_memo", SF), build)
+    assert hio.session_memo(spark, ("test_memo", rel), build) is first
+    assert len(builds) == 1
+    assert first.count() == 3
+    # the table cache shares the key builder: one copy per dataset
+    assert hio.table(spark, rel, "region") is hio.table(spark, SF, "region")
+
+    os.environ["HARMONY_CACHE_TABLES"] = "0"
+    hio.session_memo(spark, ("test_memo", SF), build)
+    hio.session_memo(spark, ("test_memo", SF), build)
+    assert len(builds) == 3  # flag off: every call builds
+
+
+def test_stale_session_entries_are_swept(spark, cache_env):
+    dead = {
+        ("app-stopped", "table", os.path.abspath(SF), "orders"): spark.range(1),
+        ("app-stopped", "lsh_pairs", os.path.abspath(SF)): spark.range(1),
+        ("app-stopped", "rank_stats", 123, "rank"): ([1.0], [(0, 5)]),
+    }
+    hio._STORE.update(dead)
+    live = hio.session_value(spark, ("test_value", SF), lambda: 42)
+    assert live == 42
+    assert not set(dead) & set(hio._STORE)
+    app_id = spark.sparkContext.applicationId
+    assert (app_id, "test_value", os.path.abspath(SF)) in hio._STORE
