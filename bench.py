@@ -4,7 +4,9 @@ full JSON line {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...} followed by a COMPACT final line with
 the same contract keys but only the 5 slowest queries (plus n_queries /
 n_errors), so a tail-window reader always gets a parseable object. The
-full per-query map is also written to bench_full.json next to this file.
+full per-query map is also written to bench_full.json next to this file;
+``python bench.py --round N`` additionally archives it as
+BENCH_full_r{NN}_c{cores}.json, cores being $SPARK_GRAFT_CPUS.
 
 Each query is executed to completion (collect) so the measurement covers
 scan -> shuffle -> result, not just plan construction. A warmup query
@@ -32,6 +34,7 @@ bare-scan path on the Spark side.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -39,6 +42,12 @@ import time
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument(
+        "--round", type=int,
+        help="also archive the full map as BENCH_full_r{NN}_c{cores}.json",
+    )
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
@@ -183,19 +192,12 @@ def main() -> None:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "bench_full.json"), "w") as f:
             json.dump(out, f)
-        # Per-round archive so later rounds can diff EVERY query, not
-        # just the aggregate: infer the upcoming round number from the
-        # driver-written BENCH_r{N}.json files already on disk.
-        import re as _re
-
-        rounds = [
-            int(m.group(1))
-            for fn in os.listdir(here)
-            if (m := _re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 0
-        with open(os.path.join(here, f"BENCH_full_r{rnd:02d}.json"), "w") as f:
-            json.dump(out, f)
+        if args.round is not None:
+            # the round and core count are given, never guessed from the
+            # files on disk, so no run overwrites another round's archive
+            cores = os.environ.get("SPARK_GRAFT_CPUS", "32")  # session.get_spark's default
+            with open(os.path.join(here, f"BENCH_full_r{args.round:02d}_c{cores}.json"), "w") as f:
+                json.dump(out, f)
     except OSError as exc:
         print(f"# bench_full.json write failed: {exc}", file=sys.stderr)
     top = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])

@@ -23,7 +23,12 @@ large net win, and it also removes the K-float R column from the cache.
 
 Kernel map to the reference:
   * recompute_R   — M1 distance GEMM 2(1 - Zn Y) fused with P4 softmax
-    and the diversity penalty (src/harmony.cpp:141,143-146,318-323).
+    and the diversity penalty (src/harmony.cpp:141,143-146,318-323),
+    in place in the GEMM's and the softmax's buffers; the penalty is one
+    row gather per covariate from the (B, K) penalty table.
+  * partials      — A4/A6 sums per batch (``_PartialAcc``): O as one
+    one-hot(level)ᵀ R GEMM over every covariate, R·logR and R·dist
+    through one scratch buffer.
   * cold start    — correction gather M2 (src/harmony.cpp:615) + P1
     normalization + penalty-free assignment (:214-228) + fused A4/A6
     partials.
@@ -38,7 +43,8 @@ Kernel map to the reference:
   * fit           — single-partition inputs: run_fit and the final
     correction in one pass, returning the fit's driver state in one row.
   * moe partials  — grouped weighted vector sums keyed by the joint
-    covariate-level combo (A8/A9: src/harmony.cpp:561-609).
+    covariate-level combo (A8/A9: src/harmony.cpp:561-609), grouped by
+    one sort of a mixed-radix int64 key.
   * correct       — final M2 materialization.
 """
 
@@ -123,8 +129,12 @@ def _normalize_rows(X: np.ndarray) -> np.ndarray:
 
 
 def _soft_assign(dist: np.ndarray, sigma: np.ndarray) -> np.ndarray:
-    R = np.exp(-dist / sigma[None, :])
-    return R / np.maximum(R.sum(axis=1, keepdims=True), 1e-30)
+    # divide, exp and normalize in one buffer; dist / -sigma is -dist /
+    # sigma bit for bit (IEEE division is sign-symmetric)
+    R = np.divide(dist, -sigma[None, :])
+    np.exp(R, out=R)
+    R /= np.maximum(R.sum(axis=1, keepdims=True), 1e-30)
+    return R
 
 
 # arithmetic block assignment for the online blocked E-step (C3):
@@ -139,14 +149,18 @@ def block_ids(cell_ids: np.ndarray, iter_idx: int, n_blocks: int) -> np.ndarray:
 
 
 def _apply_state(zn, gcodes, st):
-    dist = 2.0 * (1.0 - zn @ st["Y"])
+    dist = zn @ st["Y"]
+    np.subtract(1.0, dist, out=dist)
+    dist *= 2.0  # 2(1 - zn Y)
     R = _soft_assign(dist, st["sigma"])
     if st.get("penalty"):
         pen = ((2.0 * st["E"] + 1.0) / (st["O"] + st["E"] + 1.0)) ** st["theta"][None, :]
-        mult = np.zeros_like(R)
-        for c in range(gcodes.shape[1]):
-            mult += pen[:, gcodes[:, c]].T
-        R = R * mult
+        # (B, K): each cell's penalty row is one contiguous row gather
+        penT = np.ascontiguousarray(pen.T)
+        mult = penT[gcodes[:, 0]]
+        for c in range(1, gcodes.shape[1]):
+            mult += penT[gcodes[:, c]]
+        R *= mult
         R /= np.maximum(R.sum(axis=1, keepdims=True), 1e-30)
     return R, dist
 
@@ -205,25 +219,26 @@ class _PartialAcc:
     def add(self, R: np.ndarray, dist: np.ndarray, gcodes: np.ndarray, blocks=None) -> None:
         self.seen = True
         R64 = R.astype(np.float64)
-        safe = np.where(R64 > 0, R64 * np.log(np.maximum(R64, 1e-30)), 0.0)
-        rd = R64 * dist
+        # one (n, K) scratch buffer holds log R, then R·dist: a fresh
+        # temporary of this size per call is fresh pages to fault in.
+        # A zero R adds 0 * log(1e-30) = 0 to R·logR.
+        buf = np.maximum(R64, 1e-30)
+        np.log(buf, out=buf)
         if blocks is None:
             slots = [(0, slice(None))]
         else:
-            slots = [(i, blocks == i) for i in range(self.nb)]
+            slots = [(i, sel) for i in range(self.nb) if (sel := blocks == i).any()]
         for i, sel in slots:
             Ri = R64[sel]
-            if Ri.shape[0] == 0:
-                continue
-            gi = gcodes[sel]
-            # per-level masked sums instead of np.add.at (scatter-add is
-            # ~10x slower than vectorized reductions at this shape)
-            for c in range(gi.shape[1]):
-                codes_c = gi[:, c]
-                for b in np.unique(codes_c):
-                    self.O[i, :, b] += Ri[codes_c == b].sum(axis=0)
-            self.rlogr[i] += safe[sel].sum(axis=0)
-            self.rdist[i] += float(rd[sel].sum())
+            # O for every level of every covariate at once:
+            # one-hot(level)ᵀ R, one GEMM (a cell has one 1 per covariate)
+            onehot = np.zeros((Ri.shape[0], self.O.shape[2]))
+            onehot[np.arange(Ri.shape[0])[:, None], gcodes[sel]] = 1.0
+            self.O[i] += Ri.T @ onehot
+            self.rlogr[i] += np.einsum("ij,ij->j", Ri, buf[sel])
+        np.multiply(R64, dist, out=buf)
+        for i, sel in slots:
+            self.rdist[i] += float(buf[sel].sum())
 
     def columns(self) -> dict:
         """The per-block partials as Arrow columns of PARTIAL_SCHEMA,
@@ -414,13 +429,20 @@ def _moe_accumulate(
     RHS M), accumulated into ``acc``.  Shared by the MoE pass and the
     fit kernel so both follow the identical float sequence."""
     R, _ = recompute_R(zn, gcodes, st, cell_ids=cell_ids)
-    R = R.astype(np.float64)
-    uniq, inverse = np.unique(codes, axis=0, return_inverse=True)
-    for u in range(len(uniq)):
-        ii = np.flatnonzero(inverse == u)
-        S = R[ii].sum(axis=0)  # (K,)
-        M = R[ii].T @ z64[ii]  # (K, d)
-        add_combo(acc, tuple(int(x) for x in uniq[u]), S, M)
+    # one mixed-radix int64 key per cell over the local codes: each
+    # covariate folds in as key * (max code + 1) + code, re-ranked
+    # densely (key < n, so it never overflows).  Distinct combos get
+    # distinct keys in the lexicographic order of the code tuples, so
+    # combos arrive in np.unique(codes, axis=0) order, and each group
+    # keeps its cells in row order.
+    key = np.zeros(len(codes), dtype=np.int64)
+    for c in range(codes.shape[1]):
+        key = np.unique(key * (int(codes[:, c].max()) + 1) + codes[:, c], return_inverse=True)[1]
+    order = np.argsort(key, kind="stable")
+    for ii in np.split(order, np.flatnonzero(np.diff(key[order])) + 1):
+        Ri = R[ii].astype(np.float64)
+        # S: (K,), M: (K, d)
+        add_combo(acc, tuple(int(x) for x in codes[ii[0]]), Ri.sum(axis=0), Ri.T @ z64[ii])
 
 
 def run_round(st: dict, cold_parts, estep_parts: Callable, moe_combos: Callable) -> dict:

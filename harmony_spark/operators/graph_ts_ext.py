@@ -59,12 +59,16 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
     """Degree census + Schank-Wagner degree-oriented edge set +
     out-adjacency lists over the part co-purchase graph — the build
     q292 (global triangle count) and q352 (per-vertex clustering
-    coefficient) share verbatim.  Each piece is memoized per
-    (appId, sf) under the warm-session flag (io.session_memo), so a
-    session that runs both graph queries pays for the orientation
-    once; cold/CI runs keep the eager persist+count semantics (real
-    stats let Catalyst broadcast the node-scale lookups)."""
-    from harmony_spark.io import session_memo
+    coefficient) share verbatim.  Each piece is built materialized
+    (persist+count, or an eager localCheckpoint: real stats let
+    Catalyst broadcast the node-scale lookups) and, under the
+    warm-session flag, stored per (appId, sf) as it is — session_memo's
+    checkpoint would hold a second copy — so a session that runs both
+    graph queries pays for the orientation once."""
+    from harmony_spark.io import _cache_enabled, session_value
+
+    def memo(key: str, build) -> DataFrame:
+        return session_value(spark, (key, sf), build) if _cache_enabled() else build()
 
     def build_deg() -> DataFrame:
         pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
@@ -75,7 +79,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
         deg.count()
         return deg
 
-    deg = session_memo(spark, ("copurchase_deg", sf), build_deg)
+    deg = memo("copurchase_deg", build_deg)
 
     def build_oriented() -> DataFrame:
         pairs = _copurchase_pairs(spark, sf, src="u", dst="v")
@@ -94,7 +98,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         ).localCheckpoint(eager=True)
 
-    oriented = session_memo(spark, ("copurchase_oriented", sf), build_oriented)
+    oriented = memo("copurchase_oriented", build_oriented)
 
     def build_adj() -> DataFrame:
         adj = (
@@ -103,7 +107,7 @@ def _copurchase_oriented(spark: SparkSession, sf: str):
         adj.count()
         return adj
 
-    adj = session_memo(spark, ("copurchase_adj", sf), build_adj)
+    adj = memo("copurchase_adj", build_adj)
     return deg, oriented, adj
 
 

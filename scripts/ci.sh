@@ -43,9 +43,18 @@ assert n_entry > 0 and n_events > 0, (n_entry, n_events)
 print(f'vanilla session OK: entry {n_entry} rows, q337_window_funnel {n_events} rows')
 spark.stop()"
 
-echo "== bench contract (one JSON line) =="
+echo "== bench contract (the full JSON line, then the compact tail line) =="
 python bench.py 2>/dev/null | python -c "
 import json, sys
-d = json.load(sys.stdin)
-assert {'metric','value','unit','queries','sf'} <= set(d), d.keys()
-print(f'bench OK: {d[\"value\"]}s over {len(d[\"queries\"])} queries at sf={d[\"sf\"]}')"
+full, compact = (json.loads(line) for line in sys.stdin.read().splitlines())
+for d in (full, compact):
+    assert {'metric','value','unit','queries','sf'} <= set(d), d.keys()
+print(f'bench OK: {full[\"value\"]}s over {len(full[\"queries\"])} queries at sf={full[\"sf\"]}')"
+
+echo "== tracked bench archives unchanged (bench.py archives only with --round) =="
+if ! git diff --quiet -- 'BENCH_full_*.json'; then
+    git diff --stat -- 'BENCH_full_*.json' >&2
+    echo "a run rewrote a tracked BENCH_full_*.json archive" >&2
+    exit 1
+fi
+echo "bench archives OK"

@@ -85,3 +85,27 @@ def test_stale_session_entries_are_swept(spark, cache_env):
     assert not set(dead) & set(hio._STORE)
     app_id = spark.sparkContext.applicationId
     assert (app_id, "test_value", os.path.abspath(SF)) in hio._STORE
+
+
+def test_copurchase_orientation_is_stored_once(spark, cache_env):
+    """The orientation builds (degree census, oriented edges, out-
+    adjacency) are materialized when built, so the store keeps them as
+    they are: after one q292 call the block store lists each once, and
+    no checkpoint copy sits next to them."""
+    from harmony_spark.registry import load_all
+
+    def storage():
+        return list(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = {i.id() for i in storage()}  # blocks earlier tests left behind
+    load_all()["q292_triangle_count"].fn(spark, SF).collect()
+    infos = [i for i in storage() if i.id() not in before]
+    names = [i.name() for i in infos]
+    assert sum("count(1)" in n for n in names) == 1  # the degree census
+    assert sum("collect_list" in n for n in names) == 1  # the adjacency
+    oriented = hio._STORE[hio._store_key(spark, ("copurchase_oriented", SF))]
+    rdd_id = oriented._jdf.queryExecution().logical().rdd().id()
+    assert [i.id() for i in infos].count(rdd_id) == 1
+    # checkpointed RDDs: the memoized pair set, the oriented edges and
+    # the triangle witnesses, nothing else
+    assert names.count("MapPartitionsRDD") == 3, names

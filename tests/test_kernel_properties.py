@@ -105,3 +105,112 @@ def test_param_expansion_shapes(counts, theta, tau):
     np.testing.assert_allclose(p.Pr_b.sum(), 1.0, atol=1e-5)
     # tau damping only ever shrinks theta
     assert (p.theta <= theta + 1e-6).all()
+
+
+# two covariates with 4 + 3 levels: global codes 0..3 and 4..6; level 3
+# of the first covariate never occurs in these batches
+B_VEC, OFFSETS = (4, 3), (0, 4)
+
+
+def _gcodes(c0, c1):
+    return np.column_stack([c0, c1]).astype(np.int64) + np.asarray(OFFSETS)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    R=arrays(np.float32, (9, 3), elements=st.floats(0, 1, width=32)),
+    dist=arrays(np.float32, (9, 3), elements=st.floats(0, 4, width=32)),
+    c0=arrays(np.int64, (9,), elements=st.integers(0, 2)),
+    c1=arrays(np.int64, (9,), elements=st.integers(0, 2)),
+    blocks=arrays(np.int64, (9,), elements=st.integers(0, 1)),
+)
+def test_partial_acc_matches_masked_sums(R, dist, c0, c1, blocks):
+    """One-hot O, in-place R·logR and R·dist equal per-level masked sums,
+    per online block; block 2 gets no cells and stays zero."""
+    g = _gcodes(c0, c1)
+    acc = kernels._PartialAcc(3, sum(B_VEC), n_blocks=3)
+    acc.add(R, dist, g, blocks=blocks)
+    R64 = R.astype(np.float64)
+    rlogr = np.where(R64 > 0, R64 * np.log(np.maximum(R64, 1e-30)), 0.0)
+    for i in range(3):
+        sel = blocks == i
+        O = np.zeros((3, sum(B_VEC)))
+        for c in range(2):
+            for b in range(OFFSETS[c], OFFSETS[c] + B_VEC[c]):
+                O[:, b] = R64[sel & (g[:, c] == b)].sum(axis=0)
+        np.testing.assert_array_equal(acc.O[i], O)
+        np.testing.assert_allclose(acc.rlogr[i], rlogr[sel].sum(axis=0), rtol=1e-12, atol=0)
+        np.testing.assert_allclose(acc.rdist[i], (R64 * dist)[sel].sum(), rtol=1e-12, atol=0)
+    assert not acc.O[2].any() and not acc.O[:, :, 3].any()
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    zn=arrays(np.float32, (8, 4), elements=st.floats(-1, 1, width=32)),
+    Y=arrays(np.float32, (4, 3), elements=st.floats(-1, 1, width=32)),
+    sigma=arrays(np.float32, (3,), elements=st.floats(0.0625, 2, width=32)),
+    O=arrays(np.float32, (3, 7), elements=st.floats(0, 20, width=32)),
+    E=arrays(np.float32, (3, 7), elements=st.floats(0, 20, width=32)),
+    theta=arrays(np.float32, (7,), elements=st.floats(0, 3, width=32)),
+    c0=arrays(np.int64, (8,), elements=st.integers(0, 3)),
+    c1=arrays(np.int64, (8,), elements=st.integers(0, 2)),
+)
+def test_apply_state_penalty_matches_column_gather(zn, Y, sigma, O, E, theta, c0, c1):
+    """The row-gathered penalty gives the literal pen[:, g].T sum over
+    both covariates, bit for bit."""
+    g = _gcodes(c0, c1)
+    st_ = {"Y": Y, "sigma": sigma, "O": O, "E": E, "theta": theta, "penalty": True}
+    R, dist = kernels._apply_state(zn, g, st_)
+    ref_dist = 2.0 * (1.0 - zn @ Y)
+    ref = np.exp(-ref_dist / sigma[None, :])
+    ref = ref / np.maximum(ref.sum(axis=1, keepdims=True), 1e-30)
+    pen = ((2.0 * E + 1.0) / (O + E + 1.0)) ** theta[None, :]
+    mult = np.zeros_like(ref)
+    for c in range(2):
+        mult += pen[:, g[:, c]].T
+    ref = ref * mult
+    ref /= np.maximum(ref.sum(axis=1, keepdims=True), 1e-30)
+    np.testing.assert_array_equal(dist, ref_dist)
+    np.testing.assert_array_equal(R, ref)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    zn=arrays(np.float32, (10, 4), elements=st.floats(-1, 1, width=32)),
+    z=arrays(np.float64, (10, 4), elements=st.floats(-5, 5)),
+    c0=arrays(np.int64, (8,), elements=st.integers(0, 1)),
+    c1=arrays(np.int64, (8,), elements=st.integers(0, 2)),
+)
+def test_moe_accumulate_matches_per_tuple_loop(zn, z, c0, c1):
+    """Combo sums keyed by the mixed-radix key equal a loop over the
+    distinct code tuples.  The first two cells are (0, 2) and (1, 0): a
+    key with radix 2 (the first covariate's level count) would merge
+    them."""
+    codes = np.column_stack([np.r_[0, 1, c0], np.r_[2, 0, c1]]).astype(np.int64)
+    g = codes + np.asarray(OFFSETS)
+    st_ = {"Y": np.eye(4, 3, dtype=np.float32), "sigma": np.full(3, 0.5, np.float32), "penalty": False}
+    acc: dict = {}
+    kernels._moe_accumulate(acc, z, zn, g, codes, st_, np.arange(10))
+    R64 = kernels.recompute_R(zn, g, st_)[0].astype(np.float64)
+    tuples = sorted({tuple(int(x) for x in row) for row in codes})
+    assert list(acc) == tuples
+    for t in tuples:
+        ii = [i for i in range(10) if tuple(codes[i]) == t]
+        np.testing.assert_allclose(acc[t][0], R64[ii].sum(axis=0), rtol=1e-12, atol=0)
+        np.testing.assert_allclose(acc[t][1], R64[ii].T @ z[ii], rtol=1e-12, atol=0)
+
+
+def test_moe_combo_key_does_not_overflow():
+    """Three covariates with int32-sized codes: folded without re-ranking,
+    the key would need ~93 bits and wrap in int64."""
+    big = 2**31 - 2
+    codes = np.array([[big, 0, big], [0, big, big], [big, 0, big], [0, 0, 0], [big, big, 0]])
+    zn = np.eye(5, 4, dtype=np.float32) + 0.5
+    z = np.arange(20, dtype=np.float64).reshape(5, 4)
+    st_ = {"Y": np.eye(4, 3, dtype=np.float32), "sigma": np.full(3, 0.5, np.float32), "penalty": False}
+    acc: dict = {}
+    kernels._moe_accumulate(acc, z, zn, codes, codes, st_, np.arange(5))
+    R64 = kernels.recompute_R(zn, codes, st_)[0].astype(np.float64)
+    assert list(acc) == sorted({tuple(int(x) for x in row) for row in codes})
+    np.testing.assert_array_equal(acc[(big, 0, big)][0], R64[[0, 2]].sum(axis=0))
+    np.testing.assert_array_equal(acc[(big, 0, big)][1], R64[[0, 2]].T @ z[[0, 2]])
