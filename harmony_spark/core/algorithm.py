@@ -26,9 +26,10 @@ loop is ``kernels.run_fit``, the one fit loop of both strategies;
     (each block in blocked mode) and the MoE sums are one
     aggregation-only job, and the final correction is one more pass.
   fused (single partition, ``_fused_fit``): run_fit runs inside ONE
-    Arrow pass over the batches the kernel caches — every round plus
-    the final correction — which emits the corrected cell rows plus one
-    state row holding run_fit's result. The whole fit is one Spark job.
+    Arrow pass over the batches the kernel caches — the default
+    ``sample`` init's kmeans seeding, every round and the final
+    correction — which emits the corrected cell rows plus one state row
+    holding run_fit's result. ``run`` is one Spark job.
 Over one partition the two are bit-identical; ``run`` assigns the
 run_fit result in one place. Both E-step modes are pinned to the NumPy
 cross-oracle (numpy_ref.py) by allclose tests;
@@ -48,12 +49,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harmony_spark.core import kernels
-from harmony_spark.core.kmeans import kmeans_centers
+from harmony_spark.core.kmeans import init_centers
 from harmony_spark.core.params import HarmonyOptions, ResolvedParams, resolve_params
 
 from harmony_spark.core.scalars import SCALAR as F32, SPARK_SCALAR  # noqa: E402
 
-_INIT_SAMPLE_CAP = 30_000  # driver-side kmeans sample (init only)
+_INIT_SAMPLE_CAP = 30_000  # cells in the kmeans init sample (init only)
 FUSE_CELLS = 65_536  # at or below this many cells, one partition: one pass per round
 
 
@@ -181,10 +182,10 @@ class HarmonySpark:
         else:
             cells = cells.repartition(target_parts)
         self._cells_nparts = target_parts
-        # LAZY persist: every first consumer (the init sample collect /
-        # mllib fit / fused fit pass / round-0 cold start) is a
-        # single-scan stage, so its one job fills the cache — the former
-        # eager count() was a whole extra pass (guide §1.2)
+        # LAZY persist: every first consumer (the fused fit pass / the
+        # distributed init sample collect / mllib fit / round-0 cold
+        # start) is a single-scan stage, so its one job fills the cache —
+        # the former eager count() was a whole extra pass (guide §1.2)
         self.cells0 = cells.persist(StorageLevel.MEMORY_AND_DISK)
         self._persisted: DataFrame | None = None
 
@@ -305,16 +306,24 @@ class HarmonySpark:
         """The WHOLE fit under params ``p`` (``nb`` E-step blocks) as
         ONE Arrow pass (single-partition inputs only,
         kernels.make_fit_kernel): every round and the final correction
-        over the batches the kernel caches.  The pass is persisted and
-        its one state row collected, so that one job fills the cache.
-        Returns (cells with zn and z_corr, ``kernels.run_fit`` result)."""
+        over the batches the kernel caches.  With ``self.Y`` None the
+        pass also seeds the centroids, from the init sample ``_init_Y``
+        would take, picked by the ``seed_hash`` column it gets.  The
+        pass is persisted and its one state row collected, so that one
+        job fills the cache.  Returns (cells with zn and z_corr,
+        ``kernels.run_fit`` result)."""
         kernel = kernels.make_fit_kernel(
-            self._broadcast(p=p, Y=self.Y, mode=self.estep_mode, nb=nb),
+            self._broadcast(
+                p=p, Y=self.Y, mode=self.estep_mode, nb=nb, cap=_INIT_SAMPLE_CAP
+            ),
             self.code_cols, p.offsets, p.K, p.B,
         )
+        source = self.cells0
+        if self.Y is None:
+            source = source.withColumn("seed_hash", F.xxhash64("cell_id"))
         codes = ", ".join(f"{c} int" for c in self.code_cols)
         full = self._swap_persist(
-            self.cells0.mapInArrow(
+            source.mapInArrow(
                 kernel,
                 schema=f"cell_id long, {codes}, zn array<{SPARK_SCALAR}>, "
                 f"z_corr array<{SPARK_SCALAR}>, state binary",
@@ -350,7 +359,9 @@ class HarmonySpark:
           seeded kmeans++/Lloyd in NumPy (shared with the cross-oracle).
           The reference clusters all N cells single-node
           (src/utils.cpp:52-64); subsequent rounds refine Y through the
-          ridge intercept (M3) anyway.
+          ridge intercept (M3) anyway.  Below the fuse gate ``run``
+          skips this: the fit pass seeds from the same sample
+          (``kernels.make_fit_kernel``), so no sample leaves the cells.
         * ``mllib``: distributed ml.clustering.KMeans (k-means||) over
           the L2-normalized cells — the fully-distributed path for when
           even a 30k sample under-represents the data.
@@ -399,8 +410,7 @@ class HarmonySpark:
         # the seeding sees the sample in cell_id order; the driver holds
         # the sample anyway, so it sorts it instead of Spark
         Z = kernels._matrix(sample.toArrow().sort_by("cell_id"), "z_orig")
-        Zn = Z / np.maximum(np.linalg.norm(Z, axis=1, keepdims=True), 1e-12)
-        self.Y = kmeans_centers(Zn, p.K, p.seed)  # (d, K), L2-normalized cols
+        self.Y = init_centers(Z, p.K, p.seed)  # (d, K), L2-normalized cols
 
     # ------------------------------------------------------------ lifecycle
 
@@ -426,7 +436,11 @@ class HarmonySpark:
             )
         p = self.p
         nb = self.n_blocks if self.estep_mode == "blocked" else 1
-        self._init_Y()
+        fused = self._cells_nparts == 1
+        if fused and self.init_method == "sample" and self._init_Y_arg is None:
+            self.Y = None  # the fit pass seeds from the init sample itself
+        else:
+            self._init_Y()
 
         def report(round_idx: int, objective: float):
             if verbose:
@@ -438,7 +452,7 @@ class HarmonySpark:
             if progress is not None:
                 return progress(round_idx, objective)
 
-        if self._cells_nparts == 1:
+        if fused:
             # single-partition inputs run the whole fit as ONE Arrow pass
             cells, fit = self._fused_fit(p, nb)
             round_objs = fit["objective_harmony"][1:]
@@ -478,7 +492,7 @@ class HarmonySpark:
         self.objective_harmony = fit["objective_harmony"]
         self.kmeans_rounds = fit["kmeans_rounds"]
         self._cells_final = cells
-        if self._cells_nparts == 1:
+        if fused:
             return cells.select("cell_id", *self.code_cols, "z_corr")
         # final correction materialization (M2)
         bc = self._broadcast(W_all=self.W_all, r_state=self._r_state)

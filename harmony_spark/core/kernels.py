@@ -40,7 +40,8 @@ Kernel map to the reference:
     arrowhead closed form for one covariate) and the M3 centroid update.
   * run_fit       — the fit loop: cold start + run_round, solve_moe and
     the harmony stop test per round, for both strategies.
-  * fit           — single-partition inputs: run_fit and the final
+  * fit           — single-partition inputs: the default init's kmeans
+    seeding (M4/M5, over the driver path's sample), run_fit and the final
     correction in one pass, returning the fit's driver state in one row.
   * moe partials  — grouped weighted vector sums keyed by the joint
     covariate-level combo (A8/A9: src/harmony.cpp:561-609), grouped by
@@ -56,6 +57,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 
+from harmony_spark.core.kmeans import init_centers
 from harmony_spark.core.scalars import SCALAR as F32  # HARMONY_SCALAR_DOUBLE switch
 
 PARTIAL_SCHEMA = "blk int, o array<double>, rlogr array<double>, rdist double"
@@ -706,7 +708,12 @@ def make_fit_kernel(
     distributed path runs as a few jobs per round is one (guide §4:
     collapse tiny Python-worker round-trips).
 
-    ``bc`` holds ``{p, Y, mode, nb}``, the arguments of ``run_fit``.
+    ``bc`` holds ``{p, Y, mode, nb, cap}``: the arguments of ``run_fit``
+    and the init sample cap.  A None ``Y`` is seeded here, exactly as
+    ``HarmonySpark._init_Y`` seeds it on the driver: ``init_centers``
+    over the cells in cell_id order, or, above ``cap`` cells, over the
+    ``cap`` cells of smallest ``seed_hash`` (Spark's xxhash64(cell_id),
+    the driver sample's ``orderBy(...).limit(cap)``).
     Emits the N (cell_id, codes, zn, z_corr) rows, whose ``state`` is
     NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
     pickled ``run_fit`` dict the driver assigns as-is."""
@@ -731,21 +738,35 @@ def make_fit_kernel(
         ]
         if not cells:
             return
+        Y = fp["Y"]
+        if Y is None:  # the default init, over _init_Y's sample
+            ids = np.concatenate([c[1] for c in cells])
+            Z = np.concatenate([c[2] for c in cells])
+            if len(ids) > fp["cap"]:
+                h = np.concatenate([c[0].column("seed_hash").to_numpy() for c in cells])
+                keep = np.argsort(h, kind="stable")[: fp["cap"]]
+                ids, Z = ids[keep], Z[keep]
+            Y = init_centers(Z[np.argsort(ids, kind="stable")], fp["p"].K, fp["p"].seed)
         zn = [None] * len(cells)  # each batch's zn, as of its last cold start
 
         def round_fn(st: dict) -> dict:
             acc = _PartialAcc(K, B, n_blocks=st["nb"])  # nb>1 only in blocked mode
             for i, (_, ids, z, g, _, _) in enumerate(cells):
                 zn[i] = _cold_assign(ids, z, g, zn[i], st, acc)
+            # blocked mode: each block's (zn, gcodes) rows of every batch
+            # are fixed for the round, so every E-step reuses them
+            block_rows = [[] for _ in range(st["nb"])]
+            if st["nb"] > 1:
+                for (_, ids, _, g, _, _), x in zip(cells, zn):
+                    blocks = block_ids(ids, st["round_idx"], st["nb"])
+                    for i, rows in enumerate(block_rows):
+                        if (m := blocks == i).any():
+                            rows.append((x[m], g[m]))
 
             def estep_parts(state: dict, block: int | None):
                 eacc = _PartialAcc(K, B)
-                for (_, ids, _, g, _, _), x in zip(cells, zn):
-                    if block is not None:
-                        m = block_ids(ids, st["round_idx"], st["nb"]) == block
-                        if not m.any():
-                            continue
-                        x, g = x[m], g[m]
+                rows = zip(zn, (c[3] for c in cells)) if block is None else block_rows[block]
+                for x, g in rows:
                     R, dist = _apply_state(x, g, state)
                     eacc.add(R, dist, g)
                 return eacc.partials()
@@ -758,7 +779,7 @@ def make_fit_kernel(
 
             return run_round(st, acc.partials(), estep_parts, moe_combos)
 
-        fit = run_fit(fp["p"], fp["Y"], fp["mode"], fp["nb"], round_fn)
+        fit = run_fit(fp["p"], Y, fp["mode"], fp["nb"], round_fn)
         for (batch, ids, z, g, _, _), x in zip(cells, zn):
             R, _ = recompute_R(x, g, fit["r_state"], cell_ids=ids)
             zc = _correction(z, R, g, fit["W_all"])

@@ -1,4 +1,4 @@
-"""Seeded k-means++ + Lloyd refinement on a driver-side sample.
+"""Seeded k-means++ + Lloyd refinement on a sample of the cells.
 
 Port of kmeans_centers (/root/reference/src/utils.cpp:10-64): kmeans++
 weighted-reservoir seeding (prob = -log(u)/dist, argmin) followed by 10
@@ -7,8 +7,8 @@ ALL cells single-node; at 100 TB the engine runs it over a deterministic
 sample (standard scalable init — the subsequent harmony rounds refine Y
 anyway via the ridge intercepts, src/harmony.cpp:610).
 
-NumPy, seeded, shared by the Spark driver and the NumPy cross-oracle so
-both sides start from identical centroids.
+NumPy, seeded, shared by the Spark driver, the fused fit pass and the
+NumPy cross-oracle so every side starts from identical centroids.
 """
 
 from __future__ import annotations
@@ -32,12 +32,15 @@ def kmeans_plusplus(X: np.ndarray, K: int, rng: np.random.Generator) -> np.ndarr
         u = rng.random(n)
         with np.errstate(divide="ignore"):
             prob = -np.log(u) / np.maximum(dist, 1e-12)
-        order = np.argsort(prob)
-        j = 0
-        pick = int(order[j])
-        while pick in chosen and j + 1 < n:
-            j += 1
-            pick = int(order[j])
+        # the smallest prob not chosen yet; the full ordering is needed
+        # only when the argmin was already taken
+        pick = int(np.argmin(prob))
+        if pick in chosen:
+            order = np.argsort(prob)
+            j = 0
+            while pick in chosen and j + 1 < n:
+                j += 1
+                pick = int(order[j])
         chosen.add(pick)
         Y[i] = X[pick]
     return Y
@@ -47,14 +50,31 @@ def lloyd(X: np.ndarray, Y: np.ndarray, iters: int = 10) -> np.ndarray:
     """Plain Lloyd iterations keeping existing centroids (src/utils.cpp:52-64)."""
     K = Y.shape[0]
     for _ in range(iters):
-        # cosine-squared distance via the cross-product trick
-        d = 2.0 * (1.0 - X @ Y.T)
+        # cosine-squared distance via the cross-product trick, formed
+        # in the GEMM's buffer: 2(1 - X Yᵀ)
+        d = X @ Y.T
+        np.subtract(1.0, d, out=d)
+        d *= 2.0
         assign = np.argmin(d, axis=1)
+        # one stable sort groups each cluster's rows contiguously, in row
+        # order: each mean sums the rows a boolean mask would select, in
+        # the same order, without K full-length masks per iteration
+        order = np.argsort(assign, kind="stable")
+        Xs = X[order]
+        bounds = np.searchsorted(assign[order], np.arange(K + 1))
         for k in range(K):
-            members = X[assign == k]
-            if len(members):
-                Y[k] = members.mean(axis=0)
+            lo, hi = bounds[k], bounds[k + 1]
+            if hi > lo:
+                Y[k] = Xs[lo:hi].mean(axis=0)
     return Y
+
+
+def init_centers(Z: np.ndarray, K: int, seed: int) -> np.ndarray:
+    """The default harmony init: raw (n, d) sample rows in cell_id order
+    -> (d, K) seed centroids.  The one seeding of both strategies (the
+    driver's sample and the fused fit pass)."""
+    Zn = Z / np.maximum(np.linalg.norm(Z, axis=1, keepdims=True), 1e-12)
+    return kmeans_centers(Zn, K, seed)
 
 
 def kmeans_centers(X: np.ndarray, K: int, seed: int) -> np.ndarray:

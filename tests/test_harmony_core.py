@@ -530,8 +530,8 @@ def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
     """Embeddings are read as one flat buffer reshaped to (n, d), so a
     single short or NULL row would shift every later row.  The fit must
     refuse such input with an error naming the column: on the driver's
-    init sample, and inside the kernels when a warm start skips the
-    sample."""
+    init sample (distributed path), and inside the kernels when the
+    fused pass draws the sample itself or a warm start skips it."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, *_ = spark_fixture_df
@@ -552,8 +552,9 @@ def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
             model._cells_nparts = 2  # strategy switch only; data unchanged
         # in a kernel the ValueError reaches the driver inside Spark's
         # PythonException, whose message carries the worker traceback
+        on_driver = init_Y is None and path == "distributed"
         with pytest.raises(
-            ValueError if init_Y is None else Exception,
+            ValueError if on_driver else Exception,
             match="column 'z_orig' holds NULL or ragged arrays",
         ):
             model.run().count()
@@ -591,32 +592,72 @@ def test_no_checkpoint_after_last_round(spark, spark_fixture_df, monkeypatch, pa
 
 
 def test_fused_fit_is_one_pass(spark, spark_fixture_df):
-    """Below the fuse gate a whole fit — every round and the final
-    correction — is ONE Spark job: with ``init_Y`` no init sample is
-    taken, so run() submits exactly the fit pass, whose collect of the
-    state row also fills the cache the returned frame reads."""
+    """Below the fuse gate a whole fit — the default init's seeding,
+    every round and the final correction — is ONE Spark job: run()
+    submits exactly the fit pass, whose collect of the state row also
+    fills the cache the returned frame reads.  With ``init_Y`` no seed
+    is computed; without it the pass seeds from its own cached cells,
+    so no init sample is collected either."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, *_ = spark_fixture_df
     n = df.count()
-    model = HarmonySpark(
-        df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
-        nclust=6, max_iter=3, early_stop=False, seed=5,
-        init_Y=np.eye(Z.shape[1], 6, dtype=np.float32),
-    )
-    assert model._cells_nparts == 1
     sc = spark.sparkContext
-    group = "test-fused-fit-is-one-pass"
-    sc.setJobGroup(group, "fused fit")
-    try:
-        out = model.run()
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) == 1, jobs
-    assert len(model.kmeans_rounds) == 3
-    assert out.count() == n
-    model.cleanup()
+    for warm_start in (True, False):
+        model = HarmonySpark(
+            df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
+            nclust=6, max_iter=3, early_stop=False, seed=5,
+            init_Y=np.eye(Z.shape[1], 6, dtype=np.float32) if warm_start else None,
+        )
+        assert model._cells_nparts == 1
+        group = f"test-fused-fit-is-one-pass-{warm_start}"
+        sc.setJobGroup(group, "fused fit")
+        try:
+            out = model.run()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) == 1, (warm_start, jobs)
+        assert len(model.kmeans_rounds) == 3
+        assert out.count() == n
+        model.cleanup()
+
+
+@pytest.mark.parametrize("cap", [None, 200])
+def test_fused_fit_seeds_from_the_driver_sample(spark, spark_fixture_df, monkeypatch, cap):
+    """The fit pass's own seeding equals ``init_centers`` over the sample
+    the driver path takes (``_init_Y``), exactly: all cells in cell_id
+    order when N <= cap, else the cap cells of smallest xxhash64(cell_id)
+    (``orderBy(...).limit(cap)``; the cap reaches the kernel through the
+    broadcast).  Pinned through the whole fit: a fit that the pass
+    seeds equals one handed the driver's seed, float for float."""
+    from harmony_spark.core import algorithm
+    from harmony_spark.core.kmeans import init_centers
+
+    df, Z, *_ = spark_fixture_df
+    if cap is not None:
+        monkeypatch.setattr(algorithm, "_INIT_SAMPLE_CAP", cap)
+    fits = []
+    for seed_in_pass in (True, False):
+        model = algorithm.HarmonySpark(
+            df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1, lamb=1.0,
+            nclust=8, max_iter=2, early_stop=False, seed=11,
+        )
+        assert model._cells_nparts == 1
+        if seed_in_pass:
+            model.Y = None
+        else:
+            model._init_Y()  # the driver's sample and kmeans
+            # the fixture's row i is cell i: every cell, or a capped sample
+            assert np.array_equal(model.Y, init_centers(Z, 8, 11)) == (cap is None)
+        _, fit = model._fused_fit(model.p, 1)
+        model.cleanup()
+        fits.append(fit)
+    in_pass, driver = fits
+    for key in ("Y", "W_all", "O", "E"):
+        np.testing.assert_array_equal(in_pass[key], driver[key], err_msg=key)
+    for key in ("objective_kmeans", "objective_harmony", "kmeans_rounds"):
+        assert in_pass[key] == driver[key], key
 
 
 def test_c5_support_filter_active_cross_oracle(spark, spark_fixture_df):

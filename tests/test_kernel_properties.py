@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
 from harmony_spark.core import kernels
-from harmony_spark.core.kmeans import kmeans_centers
+from harmony_spark.core.kmeans import kmeans_centers, kmeans_plusplus, lloyd
 from harmony_spark.core.params import resolve_params
 
 finite_f32 = st.floats(-50, 50, width=32, allow_nan=False)
@@ -74,6 +74,75 @@ def test_kmeans_centers_unit_norm(X, K):
     Y = kmeans_centers(X, K, seed=3)
     assert Y.shape == (6, K)
     np.testing.assert_allclose(np.linalg.norm(Y, axis=0), 1.0, atol=1e-4)
+
+
+def _kmeans_plusplus_sorted(X, K, rng):
+    """kmeans_plusplus as a full argsort walk per centroid (its former
+    body): the exact result the argmin shortcut must keep."""
+    n = X.shape[0]
+    idx0 = np.floor(rng.random(K) * (n - 1)).astype(int)
+    Y = X[idx0].copy()
+    chosen: set[int] = set()
+    for i in range(K):
+        dist = np.abs(2.0 * (1.0 - X @ Y[i]))
+        u = rng.random(n)
+        with np.errstate(divide="ignore"):
+            prob = -np.log(u) / np.maximum(dist, 1e-12)
+        order = np.argsort(prob)
+        j = 0
+        pick = int(order[j])
+        while pick in chosen and j + 1 < n:
+            j += 1
+            pick = int(order[j])
+        chosen.add(pick)
+        Y[i] = X[pick]
+    return Y
+
+
+def _lloyd_masked(X, Y, iters=10):
+    """lloyd with one boolean mask per cluster (its former body): the
+    exact result the sort-grouped means must keep."""
+    for _ in range(iters):
+        d = 2.0 * (1.0 - X @ Y.T)
+        assign = np.argmin(d, axis=1)
+        for k in range(Y.shape[0]):
+            members = X[assign == k]
+            if len(members):
+                Y[k] = members.mean(axis=0)
+    return Y
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_kmeans_matches_literal_loops(data):
+    """The argmin k-means++ pick and the sort-grouped Lloyd means are
+    bit-identical to the literal loops: duplicate rows, K up to n, and a
+    duplicated centroid (whose cluster stays empty: argmin keeps the
+    first of two equal distances)."""
+    n = data.draw(st.integers(2, 30), label="n")
+    d = data.draw(st.integers(1, 5), label="d")
+    base = data.draw(arrays(np.float32, (n, d), elements=finite_f32), label="base")
+    rows = data.draw(arrays(np.int64, (n,), elements=st.integers(0, n - 1)), label="rows")
+    X = base[rows]  # repeated picks are duplicate rows
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    K = data.draw(st.integers(max(1, n - 3), n), label="K")
+    seed = data.draw(st.integers(0, 2**32 - 1), label="seed")
+    Y = kmeans_plusplus(X, K, np.random.default_rng(seed))
+    np.testing.assert_array_equal(Y, _kmeans_plusplus_sorted(X, K, np.random.default_rng(seed)))
+    if K > 1:
+        Y[-1] = Y[0]
+    np.testing.assert_array_equal(lloyd(X, Y.copy()), _lloyd_masked(X, Y.copy()))
+
+
+def test_lloyd_large_clusters_keep_row_order():
+    """Clusters of hundreds of rows: a float32 mean depends on the order
+    of its rows, which only a stable sort keeps equal to the masks'."""
+    for seed in range(3):
+        rng = np.random.default_rng(seed)
+        X = rng.normal(size=(600, 5)).astype(np.float32)
+        X /= np.linalg.norm(X, axis=1, keepdims=True)
+        Y = kmeans_plusplus(X, 4, np.random.default_rng(seed))
+        np.testing.assert_array_equal(lloyd(X, Y.copy()), _lloyd_masked(X, Y.copy()))
 
 
 @settings(max_examples=30, deadline=None)
