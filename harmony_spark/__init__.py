@@ -19,12 +19,18 @@ driver contract in ``__spark_entry__.py``.
 
 __version__ = "0.1.0"
 
-# every Python worker that runs one of this package's functions imports
-# the package first: from then on its per-task importlib.invalidate_caches()
-# stops re-reading unchanged zip archives (worker_startup.py)
-from harmony_spark.worker_startup import install_zip_directory_cache  # noqa: E402
+# every Spark Python worker that runs one of this package's functions
+# imports the package first: from then on its per-task
+# importlib.invalidate_caches() stops re-reading unchanged zip archives
+# (worker_startup.py).  Every worker entry point has imported
+# pyspark.worker_util by then; other processes, the driver included, keep
+# zipimport as it is.
+import sys as _sys  # noqa: E402
 
-install_zip_directory_cache()
+if "pyspark.worker_util" in _sys.modules:
+    from harmony_spark.worker_startup import install_zip_directory_cache
+
+    install_zip_directory_cache()
 
 # Lazy top-level exports (PEP 562): the package stays import-light (no
 # pyspark import until a symbol is touched), but users get the whole

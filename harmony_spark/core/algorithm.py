@@ -41,10 +41,12 @@ from __future__ import annotations
 
 import dataclasses
 import pickle
+import re
 import sys
 
 import numpy as np
 from pyspark import StorageLevel
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -329,7 +331,15 @@ class HarmonySpark:
                 f"z_corr array<{SPARK_SCALAR}>, state binary",
             )
         )
-        (row,) = full.where(F.col("cell_id").isNull()).select("state").collect()
+        try:
+            (row,) = full.where(F.col("cell_id").isNull()).select("state").collect()
+        except PythonException as e:
+            # the pass reads the embeddings (kernels._matrix): NULL or
+            # ragged ones raise the ValueError the driver's sample raises
+            bad = re.search(rf"column '[^']*' {re.escape(kernels.RAGGED)}", str(e))
+            if bad is None:
+                raise
+            raise ValueError(bad.group(0)) from e
         cells = full.where(F.col("cell_id").isNotNull()).drop("state")
         return cells, pickle.loads(row["state"])
 
@@ -404,6 +414,8 @@ class HarmonySpark:
             Yn = Y / np.maximum(np.linalg.norm(Y, axis=1, keepdims=True), 1e-12)
             self.Y = Yn.T.copy()
             return
+        # the Spark mirror of kmeans.init_sample_rows, the fused pass's
+        # sample rule: a change here must change it too
         sample = self.cells0.select("cell_id", "z_orig")
         if p.N > _INIT_SAMPLE_CAP:
             sample = sample.orderBy(F.xxhash64("cell_id")).limit(_INIT_SAMPLE_CAP)

@@ -57,7 +57,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 
-from harmony_spark.core.kmeans import init_centers
+from harmony_spark.core.kmeans import init_centers, init_sample_rows
 from harmony_spark.core.scalars import SCALAR as F32  # HARMONY_SCALAR_DOUBLE switch
 
 PARTIAL_SCHEMA = "blk int, o array<double>, rlogr array<double>, rdist double"
@@ -69,6 +69,9 @@ _PARTIAL_FIELDS = [
     ("rlogr", pa.list_(pa.float64())),
     ("rdist", pa.float64()),
 ]
+
+# _matrix's error for NULL or ragged embeddings, after the column name
+RAGGED = "holds NULL or ragged arrays: every cell needs an embedding of the same length"
 
 
 def _matrix(data: pa.RecordBatch | pa.Table, name: str, dtype=F32) -> np.ndarray:
@@ -82,10 +85,7 @@ def _matrix(data: pa.RecordBatch | pa.Table, name: str, dtype=F32) -> np.ndarray
     off = col.offsets.to_numpy()
     lens = np.diff(off)
     if col.null_count or (lens != lens[:1]).any():
-        raise ValueError(
-            f"column {name!r} holds NULL or ragged arrays: every cell needs "
-            "an embedding of the same length"
-        )
+        raise ValueError(f"column {name!r} {RAGGED}")
     values = col.values.slice(off[0], off[-1] - off[0]).to_numpy(zero_copy_only=False)
     return values.reshape(len(col), lens[0] if len(lens) else 0).astype(dtype, copy=False)
 
@@ -711,9 +711,9 @@ def make_fit_kernel(
     ``bc`` holds ``{p, Y, mode, nb, cap}``: the arguments of ``run_fit``
     and the init sample cap.  A None ``Y`` is seeded here, exactly as
     ``HarmonySpark._init_Y`` seeds it on the driver: ``init_centers``
-    over the cells in cell_id order, or, above ``cap`` cells, over the
-    ``cap`` cells of smallest ``seed_hash`` (Spark's xxhash64(cell_id),
-    the driver sample's ``orderBy(...).limit(cap)``).
+    over the rows ``kmeans.init_sample_rows`` picks, by the
+    ``seed_hash`` column (Spark's xxhash64(cell_id)) above ``cap``
+    cells.
     Emits the N (cell_id, codes, zn, z_corr) rows, whose ``state`` is
     NULL, plus ONE state row (NULL cell_id) whose ``state`` is the
     pickled ``run_fit`` dict the driver assigns as-is."""
@@ -741,12 +741,12 @@ def make_fit_kernel(
         Y = fp["Y"]
         if Y is None:  # the default init, over _init_Y's sample
             ids = np.concatenate([c[1] for c in cells])
-            Z = np.concatenate([c[2] for c in cells])
+            h = None
             if len(ids) > fp["cap"]:
                 h = np.concatenate([c[0].column("seed_hash").to_numpy() for c in cells])
-                keep = np.argsort(h, kind="stable")[: fp["cap"]]
-                ids, Z = ids[keep], Z[keep]
-            Y = init_centers(Z[np.argsort(ids, kind="stable")], fp["p"].K, fp["p"].seed)
+            rows = init_sample_rows(ids, h, fp["cap"])
+            Z = np.concatenate([c[2] for c in cells])[rows]
+            Y = init_centers(Z, fp["p"].K, fp["p"].seed)
         zn = [None] * len(cells)  # each batch's zn, as of its last cold start
 
         def round_fn(st: dict) -> dict:
@@ -756,7 +756,7 @@ def make_fit_kernel(
             # blocked mode: each block's (zn, gcodes) rows of every batch
             # are fixed for the round, so every E-step reuses them
             block_rows = [[] for _ in range(st["nb"])]
-            if st["nb"] > 1:
+            if st["mode"] == "blocked":  # also with one block: all rows
                 for (_, ids, _, g, _, _), x in zip(cells, zn):
                     blocks = block_ids(ids, st["round_idx"], st["nb"])
                     for i, rows in enumerate(block_rows):

@@ -69,6 +69,21 @@ def lloyd(X: np.ndarray, Y: np.ndarray, iters: int = 10) -> np.ndarray:
     return Y
 
 
+def init_sample_rows(
+    ids: np.ndarray, hashes: np.ndarray | None, cap: int
+) -> np.ndarray:
+    """The default init's sample as row indices into ``ids``, in cell_id
+    order: every row when there are at most ``cap``, else the ``cap``
+    rows of smallest ``hashes`` (xxhash64(cell_id)).  The fused fit pass
+    applies this rule; ``HarmonySpark._init_Y`` is its Spark mirror
+    (``orderBy(xxhash64("cell_id")).limit(cap)``, sorted by cell_id), so
+    a change here must change it too."""
+    rows = np.arange(len(ids))
+    if len(ids) > cap:
+        rows = np.argsort(hashes, kind="stable")[:cap]
+    return rows[np.argsort(ids[rows], kind="stable")]
+
+
 def init_centers(Z: np.ndarray, K: int, seed: int) -> np.ndarray:
     """The default harmony init: raw (n, d) sample rows in cell_id order
     -> (d, K) seed centroids.  The one seeding of both strategies (the

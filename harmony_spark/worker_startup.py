@@ -12,8 +12,9 @@ times, ~0.1 s).  Python 3.13 made the call lazy (the next lookup
 re-reads), so there the wrapper is not installed.
 
 Import-light on purpose (no pyspark): the package ``__init__`` installs
-it, so every worker process that unpickles one of this package's
-functions has it from then on.
+it when it is imported in a Spark Python worker, so every worker that
+unpickles one of this package's functions has it from then on; any
+other process keeps zipimport unchanged.
 """
 
 from __future__ import annotations

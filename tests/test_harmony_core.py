@@ -421,17 +421,18 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
     assignment and corrected embedding — because the Gauss-Seidel chain,
     the partial reductions and the objective live in shared helpers and
     a single partition implies a single Arrow batch (identical
-    accumulation order)."""
+    accumulation order).  Blocked mode with ONE block runs its E-steps
+    over every cell, as the distributed path does."""
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, blob, batch = spark_fixture_df
-    for mode in ("batch", "blocked"):
+    for mode, nb in (("batch", None), ("blocked", 4), ("blocked", 1)):
         runs = []
         for force_distributed in (False, True):
             model = HarmonySpark(
                 df, ["batch"], id_col="cell_id", theta=1.0, sigma=0.1,
                 lamb=1.0, nclust=8, max_iter=2, seed=11,
-                estep_mode=mode, n_blocks=(4 if mode == "blocked" else None),
+                estep_mode=mode, n_blocks=nb,
             )
             assert model._cells_nparts == 1  # fixture is fused-eligible
             if force_distributed:
@@ -456,9 +457,11 @@ def test_fused_kmeans_chain_matches_per_iteration_path(spark, spark_fixture_df):
         fused, dist = runs
         for key in fused:
             if isinstance(fused[key], list):
-                assert fused[key] == dist[key], (mode, key)
+                assert fused[key] == dist[key], (mode, nb, key)
             else:
-                np.testing.assert_array_equal(fused[key], dist[key], err_msg=f"{mode} {key}")
+                np.testing.assert_array_equal(
+                    fused[key], dist[key], err_msg=f"{mode} {nb} {key}"
+                )
 
 
 @pytest.mark.parametrize("mode", ["batch", "blocked"])
@@ -529,9 +532,12 @@ def test_distributed_round_over_three_partitions_matches_numpy(
 def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
     """Embeddings are read as one flat buffer reshaped to (n, d), so a
     single short or NULL row would shift every later row.  The fit must
-    refuse such input with an error naming the column: on the driver's
-    init sample (distributed path), and inside the kernels when the
-    fused pass draws the sample itself or a warm start skips it."""
+    refuse such input with an error naming the column: a ValueError
+    from the driver's init sample (distributed path) or from the fused
+    fit, whose pass reads the embeddings first; inside a distributed
+    kernel when a warm start skips the sample."""
+    from pyspark.errors import PythonException
+
     from harmony_spark.core.algorithm import HarmonySpark
 
     df, Z, *_ = spark_fixture_df
@@ -550,11 +556,11 @@ def test_ragged_or_null_embeddings_raise(spark, spark_fixture_df, path, bad):
         )
         if path == "distributed":
             model._cells_nparts = 2  # strategy switch only; data unchanged
-        # in a kernel the ValueError reaches the driver inside Spark's
-        # PythonException, whose message carries the worker traceback
-        on_driver = init_Y is None and path == "distributed"
+        # in a distributed kernel the ValueError reaches the driver inside
+        # Spark's PythonException, whose message carries the worker traceback
+        in_kernel = init_Y is not None and path == "distributed"
         with pytest.raises(
-            ValueError if on_driver else Exception,
+            PythonException if in_kernel else ValueError,
             match="column 'z_orig' holds NULL or ragged arrays",
         ):
             model.run().count()

@@ -1,14 +1,17 @@
 """The zip directory cache of ``harmony_spark.worker_startup``: an
 unchanged archive is not re-read by ``importlib.invalidate_caches()``,
 a rewritten one is (the property PySpark's per-task call exists for:
-pyFiles shipped between tasks), and Spark's Python workers have it."""
+pyFiles shipped between tasks), and Spark's Python workers have it
+while other processes keep zipimport as it is."""
 
 from __future__ import annotations
 
 import importlib
+import subprocess
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
@@ -38,7 +41,11 @@ def _write(path, files: dict) -> None:
 @pytest.fixture
 def archive(tmp_path, monkeypatch):
     """A zip holding a package with two subpackages, on sys.path and
-    imported, so several importer entries exist for it."""
+    imported, so several importer entries exist for it.  zipimport's
+    own invalidate_caches is restored afterwards."""
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
     path = tmp_path / "shipped.zip"
     _write(path, FILES)
     monkeypatch.syspath_prepend(str(path))
@@ -70,8 +77,9 @@ def test_unchanged_archive_is_not_reread(archive, monkeypatch):
         if isinstance(v, zipimport.zipimporter) and v.archive == archive
     ]
     assert len(entries) >= 3  # the archive root and each package directory
+    assert install_zip_directory_cache()
     wrapper = zipimport.zipimporter.invalidate_caches
-    assert install_zip_directory_cache()  # installed by the package import
+    assert install_zip_directory_cache()
     assert zipimport.zipimporter.invalidate_caches is wrapper  # a second install is a no-op
     # the first call reads the archive once: the wrapper has no stat for
     # the read that created the importers
@@ -84,6 +92,7 @@ def test_unchanged_archive_is_not_reread(archive, monkeypatch):
 
 
 def test_rewritten_archive_is_reread(archive, monkeypatch):
+    install_zip_directory_cache()
     importlib.invalidate_caches()
     with pytest.raises(ImportError):
         importlib.import_module(f"{PKG}.a.z")
@@ -113,3 +122,17 @@ def test_spark_worker_has_the_wrapper(spark):
 
     rows = spark.range(1, numPartitions=1).mapInArrow(probe, "installed boolean").collect()
     assert [r["installed"] for r in rows] == [True]
+
+
+def test_other_processes_keep_zipimport():
+    """Outside a Spark worker, importing the package leaves zipimport
+    as it is (checked in a fresh interpreter, which no test has touched)."""
+    probe = (
+        "import zipimport, harmony_spark; "
+        "print(getattr(zipimport.zipimporter.invalidate_caches, 'stat_keyed', False))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "False"
