@@ -25,7 +25,8 @@ scaling past one node.
 
 Both engines run on WARM IN-MEMORY inputs: the Spark side caches the ten
 source tables once per session (HARMONY_CACHE_TABLES=1 — the CACHE TABLE
-a warehouse would issue on its hot tables), and the DuckDB side
+a warehouse would issue on its hot tables; the warmup's first table read
+builds all ten concurrently, see ``harmony_spark.io.table``), and the DuckDB side
 materializes the same parquet files as native tables before timing.
 Neither engine pays per-query parquet re-ingest, so the ratio measures
 query execution, not file decode. HARMONY_CACHE_TABLES=0 restores the

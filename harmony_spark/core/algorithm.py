@@ -184,11 +184,17 @@ class HarmonySpark:
         else:
             cells = cells.repartition(target_parts)
         self._cells_nparts = target_parts
-        # LAZY persist: every first consumer (the fused fit pass / the
-        # distributed init sample collect / mllib fit / round-0 cold
-        # start) is a single-scan stage, so its one job fills the cache —
-        # the former eager count() was a whole extra pass (guide §1.2)
-        self.cells0 = cells.persist(StorageLevel.MEMORY_AND_DISK)
+        # LAZY persist, and only where cells0 has more than one reader:
+        # above the gate (the init sample collect, then the round-0 cold
+        # start) or under mllib init (k-means|| rereads it).  Below the
+        # gate with the sample init, the fit pass is its one reader, so a
+        # cache would only be filled and dropped (the rerun after a
+        # progress abort reads the input again).  Every first consumer
+        # is a single-scan stage, so its one job fills the cache — the
+        # former eager count() was a whole extra pass (guide §1.2)
+        if target_parts > 1 or init_method == "mllib":
+            cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+        self.cells0 = cells
         self._persisted: DataFrame | None = None
 
         # driver state

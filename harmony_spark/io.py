@@ -11,7 +11,9 @@ transpose disappears (SURVEY.md §2.1 S1).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,7 +38,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # dead JVM session) and are swept on the next access. Two entry points:
 #
 # * session_memo / table / table_parallel: DataFrames, built only under
-#   HARMONY_CACHE_TABLES=1 (the bench's warm-session mode). Default OFF:
+#   HARMONY_CACHE_TABLES=1 (the bench's warm-session mode). The table
+#   cache's unit is the dataset: one entry per (session, sf_dir) holds
+#   every table of it, built concurrently on first use. Default OFF:
 #   CI and the plan-guard tests exercise the bare FileScan path so
 #   predicate pushdown / column pruning stay observable; the bench turns
 #   it on (and gives DuckDB the same in-memory treatment) so both engines
@@ -124,20 +128,61 @@ def session_memo(spark: SparkSession, key: tuple, build) -> DataFrame:
 
 
 def _cached_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    def build() -> DataFrame:
-        # Cached at defaultParallelism deliberately.  Sizing the cache
-        # by table bytes instead (≈1 MB/partition, floor para/4) was
-        # A/B-measured on a 30-query slice in round 8: wash in total
-        # (0.99x) — ~0.15 s/stage saved on task-launch overhead for
-        # join/agg-shaped queries, but 20-40 % regressions on
-        # compute-bound map stages (q218/q344/q331/q62) that lost
-        # their parallelism.  Rejected (guide §1.2: measure, keep the
-        # evidence, don't keep the config).
-        df = ensure_parallelism(spark, _scan(spark, sf_dir, name)).persist()
-        df.count()  # materialize once; every later query reads memory
-        return df
+    """One table of the session's in-memory copy of ``sf_dir``.  The first
+    call for a dataset builds the copy of every table (see
+    :func:`_build_dataset`); every later call is a dict lookup.  A table
+    the copy lacks (its file was absent, or its build failed) is built
+    alone on each read until a build succeeds, so a broken table fails
+    only its own reads."""
+    if name not in TABLES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    tables = session_value(
+        spark, ("tables", sf_dir), lambda: _build_dataset(spark, sf_dir)
+    )
+    if name not in tables:
+        tables[name] = _build_table(spark, _scan(spark, sf_dir, name))
+    return tables[name]
 
-    return session_value(spark, ("table", sf_dir, name), build)
+
+def _build_table(spark: SparkSession, df: DataFrame) -> DataFrame:
+    # Cached at defaultParallelism deliberately.  Sizing the cache
+    # by table bytes instead (≈1 MB/partition, floor para/4) was
+    # A/B-measured on a 30-query slice in round 8: wash in total
+    # (0.99x) — ~0.15 s/stage saved on task-launch overhead for
+    # join/agg-shaped queries, but 20-40 % regressions on
+    # compute-bound map stages (q218/q344/q331/q62) that lost
+    # their parallelism.  Rejected (guide §1.2: measure, keep the
+    # evidence, don't keep the config).
+    df = ensure_parallelism(spark, df).persist()
+    try:
+        df.count()  # materialize once; every later query reads memory
+    except Exception:
+        df.unpersist()
+        raise
+    return df
+
+
+def _build_dataset(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Build the in-memory copy of every table present in ``sf_dir``,
+    one thread per table.  Each table is a chain of small jobs (schema
+    inference, the repartition, the cache fill, the count), mostly
+    1-task stages; run one table after another, they leave all but one
+    core idle, so the tables' chains overlap instead.  The threads carry
+    the caller's job group and tags (``inheritable_thread_target``), so
+    the build's jobs are attributed like the caller's own.  A table
+    whose build fails is left out; :func:`_cached_table` retries it on
+    its own read, where the error surfaces."""
+    names = [t for t in TABLES if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))]
+    if not names:
+        return {}
+    if "events" in names:
+        _pin_nanos_confs(spark)  # before the threads: they only read
+    build = inheritable_thread_target(spark)(
+        lambda name: _build_table(spark, _read(spark, sf_dir, name))
+    )
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        futures = {name: pool.submit(build, name) for name in names}
+    return {name: f.result() for name, f in futures.items() if f.exception() is None}
 
 
 def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -184,19 +229,25 @@ def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         _pin_nanos_confs(spark)
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return normalize_nanos_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, sf_dir, name)
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The parquet read of table ``name``, its nanos confs already pinned."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_nanos_ts(df) if name == "events" else df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Bare ``spark.read.parquet`` so predicates
     and projections declared downstream reach the scan (PushedFilters /
     ReadSchema). Under ``HARMONY_CACHE_TABLES=1`` returns the session's
-    in-memory copy from the session store instead (built on first use by
-    one repartition + persist + count, then one dict lookup per call) —
-    pushdown is moot against an InMemoryTableScan, and every query after
-    the first skips the parquet decode entirely.
+    in-memory copy from the session store instead — built, on the first
+    read of any table of ``sf_dir``, for every table of the dataset at
+    once (one repartition + persist + count per table, the tables
+    concurrently), then one dict lookup per call.  Pushdown is moot
+    against an InMemoryTableScan, and every query after the first skips
+    the parquet decode entirely.
 
     ``events.ts`` is physically TIMESTAMP(NANOS); see
     :func:`normalize_nanos_ts` for the version-adaptive handling.

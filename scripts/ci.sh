@@ -29,6 +29,14 @@ d = json.load(sys.stdin)
 assert d['correct'] is True, d
 print('harmony_distributed OK:', d['attempted'], 'checks')"
 
+echo "== query mix (warm cached tables: each dataset built in one concurrent pass) =="
+python3 perfbench/run.py --workload query_mix --seed 1 --seconds 1 --trace 0 \
+    | tail -n 1 | python -c "
+import json, sys
+d = json.load(sys.stdin)
+assert d['correct'] is True, d
+print('query_mix OK:', d['attempted'], 'checks')"
+
 echo "== oracle sweep at sf0.01 (the driver's correctness SF) =="
 HARMONY_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_queries.py -q
 

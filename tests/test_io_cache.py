@@ -3,11 +3,14 @@
 HARMONY_CACHE_TABLES=1 (the bench's warm-input mode) must be a pure
 performance knob: identical rows to the bare-scan path, one materialized
 copy per (session, sf_dir, table), and an InMemoryTableScan in the plan.
-Every entry is keyed per session, with dataset paths normalized, and
-entries of stopped sessions are swept.
+The cache's unit is the dataset: the first read of any table builds
+every table of its sf_dir concurrently, under the caller's job group,
+into one store entry. Every entry is keyed per session, with dataset
+paths normalized, and entries of stopped sessions are swept.
 """
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import DataFrame
@@ -19,10 +22,12 @@ from harmony_spark import io as hio
 def cache_env(monkeypatch):
     monkeypatch.setenv("HARMONY_CACHE_TABLES", "1")
     yield
-    # empty the whole store so later tests see a cold session
+    # empty the whole store so later tests see a cold session (and the
+    # plan guards bare scans, not cached copies of them)
     for value in hio._STORE.values():
-        if isinstance(value, DataFrame):
-            value.unpersist()
+        for df in value.values() if isinstance(value, dict) else [value]:
+            if isinstance(df, DataFrame):
+                df.unpersist()
     hio._STORE.clear()
 
 
@@ -75,7 +80,7 @@ def test_session_memo_builds_once_per_dataset(spark, cache_env):
 
 def test_stale_session_entries_are_swept(spark, cache_env):
     dead = {
-        ("app-stopped", "table", os.path.abspath(SF), "orders"): spark.range(1),
+        ("app-stopped", "tables", os.path.abspath(SF)): {"orders": spark.range(1)},
         ("app-stopped", "lsh_pairs", os.path.abspath(SF)): spark.range(1),
         ("app-stopped", "rank_stats", 123, "rank"): ([1.0], [(0, 5)]),
     }
@@ -109,3 +114,71 @@ def test_copurchase_orientation_is_stored_once(spark, cache_env):
     # checkpointed RDDs: the memoized pair set, the oriented edges and
     # the triangle witnesses, nothing else
     assert names.count("MapPartitionsRDD") == 3, names
+
+
+def _table_entries(spark) -> list[tuple]:
+    app = spark.sparkContext.applicationId
+    return [k for k in hio._STORE if k[0] == app and k[1] in ("table", "tables")]
+
+
+def test_dataset_is_one_entry_and_later_reads_submit_no_jobs(spark, cache_env):
+    hio.table(spark, SF, "region")
+    assert _table_entries(spark) == [hio._store_key(spark, ("tables", SF))]
+    sc = spark.sparkContext
+    group = "test-dataset-cache-lookups"
+    sc.setJobGroup(group, "reads after the first")
+    try:
+        for name in hio.TABLES:
+            hio.table(spark, SF, name)
+            hio.table_parallel(spark, SF, name)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert len(_table_entries(spark)) == 1
+    with pytest.raises(ValueError, match="unknown table"):
+        hio.table(spark, SF, "no_such_table")
+
+
+def test_dataset_build_runs_under_the_callers_job_group(spark, cache_env):
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    group = "test-dataset-cache-build"
+    sc.setJobGroup(group, "first read")
+    try:
+        hio.table(spark, SF, "orders")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # every table was built, each with at least its count job, and no
+    # build job escaped the group (threads start with no local properties)
+    (tables,) = (hio._STORE[k] for k in _table_entries(spark))
+    assert set(tables) == set(hio.TABLES)
+    assert len(jobs) >= len(hio.TABLES)
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+
+
+def test_a_broken_table_fails_only_its_own_reads(spark, cache_env, tmp_path):
+    for name in hio.TABLES:
+        shutil.copyfile(f"{SF}/{name}.parquet", tmp_path / f"{name}.parquet")
+    (tmp_path / "nation.parquet").unlink()
+    truncated = tmp_path / "supplier.parquet"
+    truncated.write_bytes(truncated.read_bytes()[:1000])
+    sf = str(tmp_path)
+
+    missing = "(?i)path does not exist|PATH_NOT_FOUND"
+    with pytest.raises(Exception, match=missing):
+        hio.table(spark, sf, "nation")  # the first read builds the rest
+    (tables,) = (hio._STORE[k] for k in _table_entries(spark))
+    assert set(tables) == set(hio.TABLES) - {"nation", "supplier"}
+    for _ in range(2):  # retried on each read, never stored
+        with pytest.raises(Exception, match="(?i)parquet"):
+            hio.table(spark, sf, "supplier")
+        with pytest.raises(Exception, match=missing):
+            hio.table_parallel(spark, sf, "nation")
+    assert set(tables) == set(hio.TABLES) - {"nation", "supplier"}
+    os.environ["HARMONY_CACHE_TABLES"] = "0"
+    bare = hio.table(spark, SF, "orders").count()
+    os.environ["HARMONY_CACHE_TABLES"] = "1"
+    assert hio.table(spark, sf, "orders") is tables["orders"]
+    assert tables["orders"].count() == bare
